@@ -164,6 +164,10 @@ object IndexBuilder {
     val spark = files.sparkSession
     import spark.implicits._
     val parts = if (numPartitions > 0) numPartitions else spark.sparkContext.defaultParallelism
+    val bcastMax = spark.conf.getOption("spark.graft.docid.broadcastMaxRows")
+      .map(v => v.toLongOption.getOrElse(throw new IllegalArgumentException(
+        s"spark.graft.docid.broadcastMaxRows must be a whole number of rows, got '$v'")))
+      .getOrElse(DOCID_BROADCAST_MAX_ROWS)
     // one range sort of the keys projection, persisted; ranks are the
     // per-partition offsets (exact, partition order == range order)
     val sortedKeys: org.apache.spark.rdd.RDD[(String, String, String)] =
@@ -203,8 +207,6 @@ object IndexBuilder {
         it.map { case (r, p, c) => val id = next; next += 1; (r, p, c, id) }
       }
       .toDF("_r", "_p", "_c", "_docId")
-    val bcastMax = spark.conf.getOption("spark.graft.docid.broadcastMaxRows")
-      .map(_.toLong).getOrElse(DOCID_BROADCAST_MAX_ROWS)
     val attach =
       if (total <= bcastMax) org.apache.spark.sql.functions.broadcast(keyIds)
       else keyIds.hint("shuffle_hash")

@@ -1,5 +1,6 @@
 package graft.index
 
+import org.apache.spark.sql.Dataset
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.fixtures.CodeCorpus
@@ -127,5 +128,45 @@ class IndexBuildSpec extends AnyFunSuite {
     def decode(ix: GraftIndex) = SegmentMerger.decodeToPostings(ix.blocks)
       .filter(_.term == "if").collect().map(p => (p.docId, p.tf)).toSet
     assert(decode(idx) == decode(idx2))
+  }
+
+  /** Runs `body` with `spark.graft.docid.broadcastMaxRows` set on the shared
+    * test session, unsetting it afterwards. */
+  private def withBroadcastMaxRows[T](v: String)(body: => T): T = {
+    spark.conf.set("spark.graft.docid.broadcastMaxRows", v)
+    try body finally spark.conf.unset("spark.graft.docid.broadcastMaxRows")
+  }
+
+  test("malformed spark.graft.docid.broadcastMaxRows fails naming the key and value") {
+    val ex = withBroadcastMaxRows("2M") {
+      intercept[IllegalArgumentException](
+        IndexBuilder.assignDocIds(spark.createDataset(tiny), numPartitions = 2))
+    }
+    assert(ex.getMessage.contains("spark.graft.docid.broadcastMaxRows"), ex.getMessage)
+    assert(ex.getMessage.contains("'2M'"), ex.getMessage)
+  }
+
+  test("shuffle-hash docId attach gives the same docIds and index as the broadcast attach") {
+    val files = spark.createDataset(tiny)
+    val cfg = IndexConfig(numPartitions = 4)
+    def keyed(ds: Dataset[(CodeFile, Long)]) =
+      ds.collect().map { case (f, id) => (f.repo, f.path, f.commit) -> id }.toMap
+    def seq[A](a: Array[A]) = Option(a).map(_.toSeq)
+    def contents(ix: GraftIndex) = (
+      ix.docs.collect().toSet,
+      ix.blocks.collect().map(b => (b.term, b.blockId, b.count, b.firstDocId, b.lastDocId,
+        b.blockTtf, seq(b.docsEnc), seq(b.freqsEnc), seq(b.normsEnc), seq(b.posEnc),
+        seq(b.impactFreqs), seq(b.impactNorms))).toSet,
+      ix.termStats.collect().toSet)
+    val broadcastAttach = IndexBuilder.assignDocIds(files, cfg.numPartitions)
+    assert(broadcastAttach.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"))
+    val broadcastIds = keyed(broadcastAttach)
+    val broadcastIndex = contents(tinyIndex)
+    withBroadcastMaxRows("0") {
+      val shuffleAttach = IndexBuilder.assignDocIds(files, cfg.numPartitions)
+      assert(shuffleAttach.queryExecution.executedPlan.toString.contains("ShuffledHashJoin"))
+      assert(keyed(shuffleAttach) == broadcastIds)
+      assert(contents(IndexBuilder.build(files, cfg)) == broadcastIndex)
+    }
   }
 }

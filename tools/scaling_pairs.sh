@@ -1,88 +1,48 @@
 #!/bin/bash
-# Calib-gated interleaved scaling pairs — the north rule's N -> 4N
-# throughput-scaling evidence, measured so this host's documented
-# pathologies (500x-slow page faults, CPU-starvation bursts, disk-write
-# throttling; see BASELINE.md) cannot silently pollute a reading:
-#
-#   attempt := probe -> ScalingBench local[LO] -> ScalingBench local[HI] -> probe
-#
-# A pair is CLEAN only when BOTH probes are healthy (fault < 1.0 s,
-# cpu < 0.5 s, 256 MB disk buffered+sync < 4.0 s i.e. > ~64 MB/s).
-# Unclean attempts are logged and discarded. Appends one JSON line per attempt to tools/scaling_r03.jsonl;
-# prints the median efficiency over clean pairs at the end.
-#
-# Usage: tools/scaling_pairs.sh [N_CLEAN_PAIRS] [DOCS] [LO] [HI]
-# Prereq: /tmp/graft-cp.txt holding the Runtime classpath
-#   (sbt -batch 'export Runtime/fullClasspath' | tail -1 > /tmp/graft-cp.txt)
+# N -> 4N scaling runner (v3 protocol): 1.6M-doc fixture, tmpfs for
+# shuffle/segment spill (-Djava.io.tmpdir/-Dspark.local.dir=/dev/shm), heap
+# 1.5 GB/core, AlwaysPreTouch, interleaved order, probe before every run.
+# Appends one JSON line per run to OUT; LABEL tags the rows ("<LABEL>-<pair>",
+# proto "v3-<LABEL>-tmpfs-<A>to<B>").
+# Usage: tools/scaling_pairs.sh <levelA> <levelB> [N_PAIRS] [DOCS] [RUNS_PER_LEVEL] [OUT] [LABEL]
+# Prereqs: /tmp/graft-cp.txt (the runtime classpath, one line) and
+#   /tmp/calib/Calib.java (a copy of tools/Calib.java).
 set -u
-PAIRS=${1:-3}; DOCS=${2:-400000}; LO=${3:-8}; HI=${4:-32}
-OUT="$(dirname "$0")/scaling_r03.jsonl"
+A=${1:-2}; B=${2:-8}; PAIRS=${3:-1}; DOCS=${4:-1600000}; RUNS=${5:-2}
+OUT=${6:-"$(dirname "$0")/scaling_r06.jsonl"}; LABEL=${7:-r6}
 CP=$(cat /tmp/graft-cp.txt)
+TMPF="-Djava.io.tmpdir=/dev/shm/graft-tmp -Dspark.local.dir=/dev/shm/graft-tmp"
+JBASE="-XX:+AlwaysPreTouch -XX:+UseTransparentHugePages $TMPF -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC"
 
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
-         java.util java.util.concurrent java.util.concurrent.atomic; do
-  ADD_OPENS="$ADD_OPENS --add-opens=java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens=java.base/$p=ALL-UNNAMED"
-done
-JOPTS="$ADD_OPENS -Xms16g -Xmx16g -XX:+UseTransparentHugePages \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC -Dderby.system.home=/tmp"
+heap_for() { echo "$(( $1 * 1536 ))m"; }
 
-probe() { # echoes "fault cpu buffered sync" or "bad"
-  local o1 o2 f c b d
+probe() {
+  local o1 f c
   o1=$(cd /tmp/calib && timeout 300 java Calib.java 2>/dev/null)
-  o2=$(cd /tmp/calib && timeout 300 java CalibD2.java 2>/dev/null)
   f=$(sed -n 's/.*fault=\([0-9.]*\).*/\1/p' <<<"$o1")
   c=$(sed -n 's/.*cpu=\([0-9.]*\).*/\1/p' <<<"$o1")
-  b=$(sed -n 's/.*buffered=\([0-9.]*\).*/\1/p' <<<"$o2")
-  d=$(sed -n 's/.*sync_flush=\([0-9.]*\).*/\1/p' <<<"$o2")
-  if [ -z "$f" ] || [ -z "$c" ] || [ -z "$b" ] || [ -z "$d" ]; then echo "bad"; else echo "$f $c $b $d"; fi
+  echo "${f:-99} ${c:-99}"
 }
 
-is_healthy() { # $1..$4 = fault cpu buffered sync
-  python3 -c "import sys; f,c,b,d=map(float,sys.argv[1:5]); sys.exit(0 if f<1.0 and c<0.5 and b+d<4.0 else 1)" "$@"
-}
-
-run_level() { # $1 = cpus; echoes build seconds or "fail"
+run_level() { # $1=cpus $2=heap
   local line
   line=$(SPARK_GRAFT_CPUS=$1 SPARK_GRAFT_CORPUS_DOCS=$DOCS \
-    timeout 3600 java $JOPTS -cp "$CP" graft.tools.ScalingBench 2>/dev/null \
+    timeout 3600 java -Xms$2 -Xmx$2 $JBASE -cp "$CP" graft.tools.ScalingBench 2>/dev/null \
     | grep '"metric":"scaling_build_sec"' | tail -1)
   if [ -z "$line" ]; then echo "fail"; else
     python3 -c "import json,sys; print(json.loads(sys.argv[1])['value'])" "$line"
   fi
 }
 
-clean=0; attempt=0
-declare -a EFFS
-while [ "$clean" -lt "$PAIRS" ] && [ "$attempt" -lt $((PAIRS * 8)) ]; do
-  attempt=$((attempt + 1))
-  p1=$(probe)
-  if [ "$p1" = "bad" ] || ! is_healthy $p1; then
-    echo "{\"attempt\":$attempt,\"status\":\"skipped_sick_window\",\"probe_before\":\"$p1\"}" | tee -a "$OUT"
-    sleep 90; continue
-  fi
-  t_lo=$(run_level "$LO"); t_hi=$(run_level "$HI")
-  p2=$(probe)
-  if [ "$t_lo" = "fail" ] || [ "$t_hi" = "fail" ]; then
-    echo "{\"attempt\":$attempt,\"status\":\"run_failed\"}" | tee -a "$OUT"; continue
-  fi
-  eff=$(python3 -c "print(round(($t_lo/$t_hi)/($HI/$LO),3))")
-  if [ "$p2" != "bad" ] && is_healthy $p2; then
-    clean=$((clean + 1)); status="clean"; EFFS+=("$eff")
-  else
-    status="dirty_after"
-  fi
-  echo "{\"attempt\":$attempt,\"status\":\"$status\",\"docs\":$DOCS,\"lo\":$LO,\"hi\":$HI,\"t_lo\":$t_lo,\"t_hi\":$t_hi,\"efficiency\":$eff,\"probe_before\":\"$p1\",\"probe_after\":\"$p2\"}" | tee -a "$OUT"
+for pair in $(seq 1 "$PAIRS"); do
+  if [ $((pair % 2)) -eq 1 ]; then ORDER="$A $B"; else ORDER="$B $A"; fi
+  for cpus in $ORDER; do
+    heap=$(heap_for "$cpus")
+    for r in $(seq 1 "$RUNS"); do
+      p=$(probe)
+      t=$(run_level "$cpus" "$heap")
+      [ "$t" = "fail" ] && t=-1
+      echo "{\"pair\":\"$LABEL-$pair\",\"cpus\":$cpus,\"heap\":\"$heap\",\"build_sec\":$t,\"probe\":\"$p\",\"docs\":$DOCS,\"proto\":\"v3-$LABEL-tmpfs-${A}to${B}\"}" | tee -a "$OUT"
+    done
+  done
 done
-
-if [ "${#EFFS[@]}" -gt 0 ]; then
-  python3 -c "
-import statistics, sys
-e = sorted(float(x) for x in sys.argv[1:])
-print(f'clean_pairs={len(e)} efficiencies={e} median={statistics.median(e):.3f}')" "${EFFS[@]}"
-else
-  echo "no clean pairs collected"
-fi
