@@ -1,10 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.codec.{Impact, PostingsCodec}
-import graft.index.BlockRow
-import graft.search.TopK
+import graft.codec.PostingsCodec
+import graft.index.{GraftIndex, PostingRow, ScoreDocD, SegmentMerger}
+import graft.search.{GraftSearcher, Query, TopK}
 
 /** Fulltext-engine queries for the driver contract: every result is produced
   * by the REAL index/search path (posting blocks, BM25, phrase positions)
@@ -21,6 +21,12 @@ import graft.search.TopK
   * (Lucene-verbatim score + block-max pruning) is covered by the scalatest
   * differential suite (pruned vs exhaustive Float oracle, SearchSpec) and
   * by `SparkEntry.entry`.
+  *
+  * Entries read the engine through one helper per surface: `hitsDoubleDF`
+  * (double-mode top-k) and `matchDF` (the unranked match set), both mapping
+  * internal docIds to `doc_id` through the searcher's own index, and
+  * `postings` with its `termPos` view (postings decoded off the real
+  * blocks). An entry with a different chain keeps only its own tail.
   */
 object FulltextQueries {
 
@@ -295,39 +301,44 @@ object FulltextQueries {
     s"CASE WHEN $tf = 0 THEN 0.0 ELSE $idf * ($tf * (1.2 + 1)) " +
       s"/ ($tf + 1.2 * (1 - 0.75 + 0.75 * dlq / st.avgdl)) END"
 
-  private def hitsDoubleDF(spark: SparkSession, sfDir: String, q: String, k: Int): DataFrame = {
-    val (index, searcher) = DocsIndex.get(spark, sfDir)
-    searcher.searchDoubleDS(searcher.parse(q), k).toDF()
-      .join(DocsIndex.docIdMap(index), "docId")
-      .orderBy(desc("score"), asc("doc_id"))
-      .limit(k)
+  // ---- the three engine surfaces every entry reads through. Each takes
+  // the searcher (or its index), so docIds always map to doc_id through the
+  // index that produced them — any variant, any `withSimilarity` view. ----
+
+  /** The searcher over the `v` variant index (default: the plain corpus). */
+  private def searcherOf(spark: SparkSession, sfDir: String,
+      v: DocsIndex.Variant = DocsIndex.Plain): GraftSearcher = DocsIndex.get(spark, sfDir, v)._2
+
+  /** Double-mode top-k as (doc_id, score): the engine's per-range hits,
+    * one global (score desc, doc_id asc) cut. */
+  private[queries] def hitsDoubleDF(s: GraftSearcher, q: Query, k: Int,
+      after: ScoreDocD = null): DataFrame =
+    s.searchDoubleDS(q, k, after).toDF()
+      .join(DocsIndex.docIdMap(s.index), "docId")
+      .orderBy(desc("score"), asc("doc_id")).limit(k)
       .select(col("doc_id"), col("score"))
-  }
 
-  /** Decoded (docId, term, position) rows for the given terms, straight
-    * off the real posting blocks — the position source for the automaton /
-    * fragment operators. */
-  private def termPos(spark: SparkSession, index: graft.index.GraftIndex,
-      terms: Seq[String]): DataFrame = {
-    import spark.implicits._
-    index.blocks.filter(col("term").isin(terms: _*)).as[BlockRow]
-      .flatMap { b =>
-        val eb = b.toEncodedBlock
-        val docs = PostingsCodec.decodeDocs(eb)
-        val freqs = PostingsCodec.decodeFreqs(eb)
-        val poss = PostingsCodec.decodePositions(eb, freqs)
-        docs.indices.iterator.flatMap(i =>
-          poss(i).iterator.map(p => (docs(i), b.term, p.toLong)))
-      }.toDF("docId", "term", "p")
-  }
+  private[queries] def hitsDoubleDF(s: GraftSearcher, q: String, k: Int): DataFrame =
+    hitsDoubleDF(s, s.parse(q), k)
 
-  private def matchDF(spark: SparkSession, sfDir: String, q: String): DataFrame = {
-    val (index, searcher) = DocsIndex.get(spark, sfDir)
-    searcher.matchesDS(searcher.parse(q)).toDF("docId")
-      .join(DocsIndex.docIdMap(index), "docId")
-      .select(col("doc_id"))
-      .orderBy("doc_id")
-  }
+  /** The unranked match set as sorted doc_id rows. */
+  private[queries] def matchDF(s: GraftSearcher, q: Query): DataFrame =
+    s.matchesDS(q).toDF("docId")
+      .join(DocsIndex.docIdMap(s.index), "docId")
+      .select(col("doc_id")).orderBy("doc_id")
+
+  private[queries] def matchDF(s: GraftSearcher, q: String): DataFrame = matchDF(s, s.parse(q))
+
+  /** Decoded postings of `terms`, straight off the real posting blocks. */
+  private def postings(index: GraftIndex, terms: String*): Dataset[PostingRow] =
+    SegmentMerger.decodeToPostings(index.blocks.filter(col("term").isin(terms: _*)))
+
+  /** One (docId, term, p) row per decoded position — the position source
+    * for the automaton / fragment operators. */
+  private def termPos(index: GraftIndex, terms: String*): DataFrame =
+    postings(index, terms: _*)
+      .select(col("docId"), col("term"), explode(col("positions")).as("p"))
+      .withColumn("p", col("p").cast("long"))
 
   /** Column analog of `TopK.round4` (floor(x·1e4 + 0.5)/1e4) — identical
     * to DuckDB's `round(x, 4)` for the non-negative scores it's applied
@@ -480,14 +491,7 @@ object FulltextQueries {
     "ft_frange" -> ((spark, sfDir) => {
       import spark.implicits._
       val (index, _) = DocsIndex.get(spark, sfDir)
-      val decoded = index.blocks.filter($"term" === "vector").as[BlockRow]
-        .flatMap { b =>
-          val eb = b.toEncodedBlock
-          val docs = PostingsCodec.decodeDocs(eb)
-          val freqs = PostingsCodec.decodeFreqs(eb)
-          docs.indices.iterator.map(i => (docs(i), freqs(i).toLong))
-        }.toDF("docId", "tf")
-      decoded
+      postings(index, "vector").select($"docId", $"tf")
         .join(index.docs.toDF().select(col("docId"), col("len")), "docId")
         .withColumn("rtf", col("tf").cast("double") / col("len"))
         .filter(col("rtf") >= 0.02 && col("rtf") <= 0.05)
@@ -498,16 +502,9 @@ object FulltextQueries {
     "ft_postings_tf" -> ((spark, sfDir) => {
       import spark.implicits._
       val (index, _) = DocsIndex.get(spark, sfDir)
-      val terms = Seq("spark", "query", "vector")
-      val decoded = index.blocks.filter($"term".isin(terms: _*)).as[BlockRow]
-        .flatMap { b =>
-          val eb = b.toEncodedBlock
-          val docs = PostingsCodec.decodeDocs(eb)
-          val freqs = PostingsCodec.decodeFreqs(eb)
-          docs.indices.iterator.map(i => (b.term, docs(i), freqs(i).toLong))
-        }.toDF("term", "docId", "tf")
-      decoded.join(DocsIndex.docIdMap(index), "docId")
-        .select($"term", $"doc_id", $"tf")
+      postings(index, "spark", "query", "vector")
+        .join(DocsIndex.docIdMap(index), "docId")
+        .select($"term", $"doc_id", $"tf".cast("long").as("tf"))
         .orderBy("term", "doc_id")
     }),
     // hybrid rank fusion — Reciprocal Rank Fusion (Cormack et al. 2009,
@@ -570,16 +567,8 @@ object FulltextQueries {
     "ft_term_positions" -> ((spark, sfDir) => {
       import spark.implicits._
       val (index, _) = DocsIndex.get(spark, sfDir)
-      val decoded = index.blocks.filter($"term" === "window").as[BlockRow]
-        .flatMap { b =>
-          val eb = b.toEncodedBlock
-          val docs = PostingsCodec.decodeDocs(eb)
-          val freqs = PostingsCodec.decodeFreqs(eb)
-          val poss = PostingsCodec.decodePositions(eb, freqs)
-          docs.indices.iterator.flatMap(i => poss(i).iterator.map(p => (docs(i), p.toLong)))
-        }.toDF("docId", "pos")
-      decoded.join(DocsIndex.docIdMap(index), "docId")
-        .select($"doc_id", $"pos").orderBy("doc_id", "pos")
+      termPos(index, "window").join(DocsIndex.docIdMap(index), "docId")
+        .select($"doc_id", $"p".as("pos")).orderBy("doc_id", "pos")
     }),
     // PayloadScoreQuery over a span term (reference: lucene/queries/src/
     // java/org/apache/lucene/queries/payloads/PayloadScoreQuery.java:44-75
@@ -595,16 +584,9 @@ object FulltextQueries {
     "ft_payload_score" -> ((spark, sfDir) => {
       import spark.implicits._
       val (index, _) = DocsIndex.get(spark, sfDir)
-      val decoded = index.blocks.filter($"term" === "merge").as[BlockRow]
-        .flatMap { b =>
-          val eb = b.toEncodedBlock
-          val docs = PostingsCodec.decodeDocs(eb)
-          val freqs = PostingsCodec.decodeFreqs(eb)
-          val poss = PostingsCodec.decodePositions(eb, freqs)
-          docs.indices.iterator.flatMap(i =>
-            poss(i).iterator.map(p => (docs(i), ((p % 11) + 1).toDouble)))
-        }.toDF("docId", "payload")
-      decoded.groupBy("docId")
+      termPos(index, "merge")
+        .select($"docId", (($"p" % 11) + 1).cast("double").as("payload"))
+        .groupBy("docId")
         .agg(count(lit(1)).as("tf"),
           min("payload").as("p_min"), max("payload").as("p_max"),
           sum("payload").as("p_sum"),
@@ -622,18 +604,8 @@ object FulltextQueries {
     "ft_payload_check" -> ((spark, sfDir) => {
       import spark.implicits._
       val (index, _) = DocsIndex.get(spark, sfDir)
-      val decoded = index.blocks.filter($"term" === "merge").as[BlockRow]
-        .flatMap { b =>
-          val eb = b.toEncodedBlock
-          val docs = PostingsCodec.decodeDocs(eb)
-          val freqs = PostingsCodec.decodeFreqs(eb)
-          val poss = PostingsCodec.decodePositions(eb, freqs)
-          docs.indices.iterator.flatMap(i =>
-            poss(i).iterator
-              .filter(p => ((p % 11) + 1).toDouble == 5.0d)
-              .map(p => (docs(i), p.toLong)))
-        }.toDF("docId", "pos")
-      decoded.groupBy("docId").agg(count(lit(1)).as("n_match"))
+      termPos(index, "merge").filter(($"p" % 11) + 1 === 5)
+        .groupBy("docId").agg(count(lit(1)).as("n_match"))
         .join(DocsIndex.docIdMap(index), "docId")
         .select($"doc_id", $"n_match")
         .orderBy("doc_id")
@@ -648,16 +620,10 @@ object FulltextQueries {
     "ft_payload_delimited" -> ((spark, sfDir) => {
       import spark.implicits._
       val (index, _) = DocsIndex.get(spark, sfDir, DocsIndex.Payload)
-      val decoded = index.blocks.filter($"term" === "merge").as[BlockRow]
-        .flatMap { b =>
-          val eb = b.toEncodedBlock
-          val docs = PostingsCodec.decodeDocs(eb)
-          val freqs = PostingsCodec.decodeFreqs(eb)
-          val pays = PostingsCodec.decodePayloads(eb, freqs)
-          docs.indices.iterator.flatMap(i =>
-            pays(i).iterator.filter(_ >= 0).map(p => (docs(i), p.toDouble)))
-        }.toDF("docId", "payload")
-      decoded.groupBy("docId")
+      postings(index, "merge").select($"docId", explode($"payloads").as("payload"))
+        .filter($"payload" >= 0)
+        .withColumn("payload", $"payload".cast("double"))
+        .groupBy("docId")
         .agg(count(lit(1)).as("tf"),
           min("payload").as("p_min"), max("payload").as("p_max"),
           sum("payload").as("p_sum"),
@@ -671,16 +637,9 @@ object FulltextQueries {
     "ft_payload_delimited_check" -> ((spark, sfDir) => {
       import spark.implicits._
       val (index, _) = DocsIndex.get(spark, sfDir, DocsIndex.Payload)
-      val decoded = index.blocks.filter($"term" === "merge").as[BlockRow]
-        .flatMap { b =>
-          val eb = b.toEncodedBlock
-          val docs = PostingsCodec.decodeDocs(eb)
-          val freqs = PostingsCodec.decodeFreqs(eb)
-          val pays = PostingsCodec.decodePayloads(eb, freqs)
-          docs.indices.iterator.flatMap(i =>
-            pays(i).iterator.filter(_ == 9).map(_ => (docs(i), 1L)))
-        }.toDF("docId", "one")
-      decoded.groupBy("docId").agg(count(lit(1)).as("n_match"))
+      postings(index, "merge").select($"docId", explode($"payloads").as("payload"))
+        .filter($"payload" === 9)
+        .groupBy("docId").agg(count(lit(1)).as("n_match"))
         .join(DocsIndex.docIdMap(index), "docId")
         .select($"doc_id", $"n_match")
         .orderBy("doc_id")
@@ -709,12 +668,13 @@ object FulltextQueries {
         .limit(20)
     }),
     // ---- boolean / phrase / prefix match sets (exact, oracle-verified) ----
-    "ft_match_and" -> ((spark, sfDir) => matchDF(spark, sfDir, "spark AND vector AND hash")),
-    "ft_match_or" -> ((spark, sfDir) => matchDF(spark, sfDir, "vector OR customer")),
-    "ft_match_not" -> ((spark, sfDir) => matchDF(spark, sfDir, "spark NOT vector")),
-    "ft_match_phrase" -> ((spark, sfDir) => matchDF(spark, sfDir, "\"big table\"")),
-    "ft_match_prefix" -> ((spark, sfDir) => matchDF(spark, sfDir, "cust*")),
-    "ft_match_wildcard" -> ((spark, sfDir) => matchDF(spark, sfDir, "w?ndow")),
+    "ft_match_and" -> ((spark, sfDir) =>
+      matchDF(searcherOf(spark, sfDir), "spark AND vector AND hash")),
+    "ft_match_or" -> ((spark, sfDir) => matchDF(searcherOf(spark, sfDir), "vector OR customer")),
+    "ft_match_not" -> ((spark, sfDir) => matchDF(searcherOf(spark, sfDir), "spark NOT vector")),
+    "ft_match_phrase" -> ((spark, sfDir) => matchDF(searcherOf(spark, sfDir), "\"big table\"")),
+    "ft_match_prefix" -> ((spark, sfDir) => matchDF(searcherOf(spark, sfDir), "cust*")),
+    "ft_match_wildcard" -> ((spark, sfDir) => matchDF(searcherOf(spark, sfDir), "w?ndow")),
     // Leading-wildcard via the reversed dictionary — Solr's
     // ReversedWildcardFilter trick (reference: solr/core/src/java/org/apache/
     // solr/analysis/ReversedWildcardFilterFactory.java:30-60 — index-side
@@ -733,9 +693,7 @@ object FulltextQueries {
         .filter(col("rterm").startsWith("elba"))
         .select("term").collect().map(_.getString(0)).toSeq.sorted
       val q = graft.search.ConstSetQ(terms)
-      searcher.matchesDS(q).toDF("docId")
-        .join(DocsIndex.docIdMap(index), "docId")
-        .select(col("doc_id")).orderBy("doc_id")
+      matchDF(searcher, q)
     }),
     // CollapsingQParserPlugin with a min-field selector (reference: solr/
     // core/src/java/org/apache/solr/search/CollapsingQParserPlugin.java —
@@ -757,54 +715,42 @@ object FulltextQueries {
     }),
     // sloppy phrase: "big table"~2 — every anchor occurrence of 'big' with a
     // 'table' within 2 positions of the exact-phrase slot
-    "ft_match_sloppy" -> ((spark, sfDir) => matchDF(spark, sfDir, "\"big table\"~2")),
+    "ft_match_sloppy" -> ((spark, sfDir) => matchDF(searcherOf(spark, sfDir), "\"big table\"~2")),
     // 3-term sloppy phrase through the Lucene window condition (one
     // occurrence per slot, offset-adjusted span <= slop) — the
     // smallest-covering-range sweep, not the anchored 2-term fast path
-    "ft_match_sloppy3" -> ((spark, sfDir) => matchDF(spark, sfDir, "\"spark query table\"~3")),
+    "ft_match_sloppy3" -> ((spark, sfDir) =>
+      matchDF(searcherOf(spark, sfDir), "\"spark query table\"~3")),
     // FuzzyQuery: terms within Levenshtein distance 2 ('sort' also pulls in
     // 'part'), constant-score rewrite, distributed dictionary walk
-    "ft_match_fuzzy" -> ((spark, sfDir) => matchDF(spark, sfDir, "sort~2")),
+    "ft_match_fuzzy" -> ((spark, sfDir) => matchDF(searcherOf(spark, sfDir), "sort~2")),
     // FuzzyQuery with prefixLength (FuzzyQuery.java defaultPrefixLength
     // knob): the first 2 chars must match EXACTLY — the production setting
     // that turns the dictionary pass into a prefix range seek. AST-built
     // (the classic parser has no prefixLength syntax, matching Lucene).
-    "ft_match_fuzzy_prefix" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir)
-      searcher.matchesDS(graft.search.FuzzyQ("sort", 2, prefixLength = 2)).toDF("docId")
-        .join(DocsIndex.docIdMap(index), "docId")
-        .select(col("doc_id"))
-        .orderBy("doc_id")
-    }),
+    "ft_match_fuzzy_prefix" -> ((spark, sfDir) =>
+      matchDF(searcherOf(spark, sfDir), graft.search.FuzzyQ("sort", 2, prefixLength = 2))),
     // FuzzyQuery with transpositions=true — Lucene's DEFAULT fuzzy semantics
     // (FuzzyQuery.java defaultTranspositions): adjacent swaps cost ONE edit.
     // Engine computes unrestricted Damerau-Levenshtein over the dictionary;
     // the oracle recomputes the identical function via DuckDB's
     // damerau_levenshtein(). (QueryParserSpec pins the divergent cases —
     // dl('abaa','baaa')=1 vs lev=2 — on synthetic dictionaries.)
-    "ft_match_fuzzy_dl" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir)
-      searcher.matchesDS(graft.search.FuzzyQ("sort", 2, transpositions = true)).toDF("docId")
-        .join(DocsIndex.docIdMap(index), "docId")
-        .select(col("doc_id"))
-        .orderBy("doc_id")
-    }),
+    "ft_match_fuzzy_dl" -> ((spark, sfDir) =>
+      matchDF(searcherOf(spark, sfDir), graft.search.FuzzyQ("sort", 2, transpositions = true))),
     // TermRangeQuery: lexicographic [row TO sort] — pushes down to parquet
     // term min/max pruning like a dictionary seek
-    "ft_match_range" -> ((spark, sfDir) => matchDF(spark, sfDir, "[row TO sort]")),
+    "ft_match_range" -> ((spark, sfDir) => matchDF(searcherOf(spark, sfDir), "[row TO sort]")),
     // RegexpQuery: anchored regex over the term dictionary
-    "ft_match_regexp" -> ((spark, sfDir) => matchDF(spark, sfDir, "/s(can|ort|low)/")),
+    "ft_match_regexp" -> ((spark, sfDir) => matchDF(searcherOf(spark, sfDir), "/s(can|ort|low)/")),
     // minShouldMatch >= 2 of 3 (MinShouldMatchSumScorer analog) — AST-built
     "ft_match_msm" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir)
+      val searcher = searcherOf(spark, sfDir)
       val q = graft.search.BoolQ(
         should = Seq(graft.search.TermQ("vector"), graft.search.TermQ("customer"),
           graft.search.TermQ("hash")),
         minShouldMatch = 2)
-      searcher.matchesDS(q).toDF("docId")
-        .join(DocsIndex.docIdMap(index), "docId")
-        .select(col("doc_id"))
-        .orderBy("doc_id")
+      matchDF(searcher, q)
     }),
     // facet over a search match set (Solr FacetModule applies facets to the
     // query result, not the raw table): lang buckets of the OR match set
@@ -929,13 +875,9 @@ object FulltextQueries {
     // is ONE postings lookup instead of a positional intersection against
     // the corpus's highest-df term): BM25 over the gram's real tf/df with
     // the unigram doc length (grams are stacked, discountOverlaps).
-    "ft_commongrams" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.CommonGrams)
-      searcher.searchDoubleDS(graft.search.TermQ("the_table"), 10).toDF()
-        .join(DocsIndex.docIdMap(index), "docId")
-        .orderBy(desc("score"), asc("doc_id")).limit(10)
-        .select(col("doc_id"), col("score"))
-    }),
+    "ft_commongrams" -> ((spark, sfDir) =>
+      hitsDoubleDF(searcherOf(spark, sfDir, DocsIndex.CommonGrams),
+        graft.search.TermQ("the_table"), 10)),
     // TermAutomatonQuery (reference: lucene/sandbox/src/java/org/apache/
     // lucene/search/TermAutomatonQuery.java — an automaton over terms at
     // positions; here the two accepted paths are `merge query` and
@@ -944,7 +886,7 @@ object FulltextQueries {
     // (docId, consecutive positions) — never a full-text rescan.
     "ft_term_automaton" -> ((spark, sfDir) => {
       val (index, _) = DocsIndex.get(spark, sfDir)
-      val pos = termPos(spark, index, Seq("merge", "table", "query"))
+      val pos = termPos(index, "merge", "table", "query")
       val m = pos.filter(col("term") === "merge").select(col("docId"), col("p").as("pm"))
       val t = pos.filter(col("term") === "table").select(col("docId").as("dt"), col("p").as("pt"))
       val q = pos.filter(col("term") === "query").select(col("docId").as("dq"), col("p").as("pq"))
@@ -968,7 +910,7 @@ object FulltextQueries {
     "ft_fvh_fragment" -> ((spark, sfDir) => {
       import org.apache.spark.sql.expressions.Window
       val (index, _) = DocsIndex.get(spark, sfDir)
-      val pos = termPos(spark, index, Seq("merge", "table"))
+      val pos = termPos(index, "merge", "table")
         .select(col("docId"), col("p").as("s"))
       val b = pos.select(col("docId").as("d2"), col("s").as("p2"))
       val counts = pos.join(b,
@@ -1150,202 +1092,106 @@ object FulltextQueries {
     // ---- deletes: tombstoned docs (doc_id % 7 == 0) stop matching every
     // query shape immediately — term sets, NOT/MatchAll anchors, and scored
     // top-k all honor the .liv-analog tombstones ----
-    "ft_delete_match" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.Deletes)
-      searcher.matchesDS(searcher.parse("vector OR customer")).toDF("docId")
-        .join(DocsIndex.docIdMap(index), "docId")
-        .select(col("doc_id"))
-        .orderBy("doc_id")
-    }),
-    "ft_delete_not" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.Deletes)
-      searcher.matchesDS(searcher.parse("NOT vector")).toDF("docId")
-        .join(DocsIndex.docIdMap(index), "docId")
-        .select(col("doc_id"))
-        .orderBy("doc_id")
-    }),
-    "ft_delete_search" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.Deletes)
-      searcher.searchDoubleDS(searcher.parse("vector"), 10).toDF()
-        .join(DocsIndex.docIdMap(index), "docId")
-        .orderBy(desc("score"), asc("doc_id"))
-        .limit(10)
-        .select(col("doc_id"), col("score"))
-    }),
+    "ft_delete_match" -> ((spark, sfDir) =>
+      matchDF(searcherOf(spark, sfDir, DocsIndex.Deletes), "vector OR customer")),
+    "ft_delete_not" -> ((spark, sfDir) =>
+      matchDF(searcherOf(spark, sfDir, DocsIndex.Deletes), "NOT vector")),
+    "ft_delete_search" -> ((spark, sfDir) =>
+      hitsDoubleDF(searcherOf(spark, sfDir, DocsIndex.Deletes), "vector", 10)),
     // ---- BM25 top-k, double-scored + oracle-verified (the same engine
     // path — blocks, norms, scatter/merge — with DuckDB-recomputable math;
     // the Float-exact + pruning path is differential-tested in SearchSpec) ----
-    "ft_search_term" -> ((spark, sfDir) => hitsDoubleDF(spark, sfDir, "vector", 10)),
+    "ft_search_term" -> ((spark, sfDir) => hitsDoubleDF(searcherOf(spark, sfDir), "vector", 10)),
     // ClassicSimilarity (practical TF-IDF) top-10 through the pluggable
     // Similarity (IndexSearcher.setSimilarity analog; reference:
     // lucene/core/src/java/org/apache/lucene/search/similarities/ClassicSimilarity.java:
     // tf = sqrt(freq), idf = ln((docCount+1)/(df+1)) + 1, norm = 1/sqrt(dl))
     // — same postings/norm-byte inputs as BM25, quantized dl in the oracle
-    "ft_search_tfidf" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir)
-      val s = searcher.withSimilarity(graft.search.ClassicSim)
-      s.searchDoubleDS(s.parse("vector"), 10).toDF()
-        .join(DocsIndex.docIdMap(index), "docId")
-        .orderBy(desc("score"), asc("doc_id"))
-        .limit(10)
-        .select(col("doc_id"), col("score"))
-    }),
+    "ft_search_tfidf" -> ((spark, sfDir) =>
+      hitsDoubleDF(searcherOf(spark, sfDir).withSimilarity(graft.search.ClassicSim), "vector", 10)),
     // SweetSpotSimilarity top-10 (reference: lucene/misc/src/java/org/
     // apache/lucene/misc/SweetSpotSimilarity.java:117-165): doc lengths
     // inside the [30, 70] sweet spot get lengthNorm 1.0, outside decays as
     // 1/sqrt(0.5·excess + 1); tf floors at 1.5 for freq ≤ 2 then grows as
     // sqrt(freq + 1.5² − 2). Exercises a plateau norm over the same
     // norm-byte inputs as the other TF-IDF-family rows.
-    "ft_search_sweetspot" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir)
-      val s = searcher.withSimilarity(
-        graft.search.SweetSpotSim(lnMin = 30, lnMax = 70))
-      s.searchDoubleDS(s.parse("filter"), 10).toDF()
-        .join(DocsIndex.docIdMap(index), "docId")
-        .orderBy(desc("score"), asc("doc_id"))
-        .limit(10)
-        .select(col("doc_id"), col("score"))
-    }),
+    "ft_search_sweetspot" -> ((spark, sfDir) =>
+      hitsDoubleDF(
+        searcherOf(spark, sfDir).withSimilarity(graft.search.SweetSpotSim(lnMin = 30, lnMax = 70)),
+        "filter", 10)),
     // LMDirichletSimilarity top-10 (reference: LMDirichletSimilarity.java:74-88,
     // mu = 2000; p(w|C) = (ttf+1)/(sumTotalTermFreq+1), LMSimilarity.java:55)
     // — exercises the totalTermFreq stats the dictionary carries per term
-    "ft_search_lmd" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir)
-      val s = searcher.withSimilarity(graft.search.LMDirichletSim())
-      s.searchDoubleDS(s.parse("table"), 10).toDF()
-        .join(DocsIndex.docIdMap(index), "docId")
-        .orderBy(desc("score"), asc("doc_id"))
-        .limit(10)
-        .select(col("doc_id"), col("score"))
-    }),
+    "ft_search_lmd" -> ((spark, sfDir) =>
+      hitsDoubleDF(
+        searcherOf(spark, sfDir).withSimilarity(graft.search.LMDirichletSim()),
+        "table", 10)),
     // LMJelinekMercer (λ=0.1) top-10 (reference: LMJelinekMercerSimilarity.java:63-68)
-    "ft_search_lmjm" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir)
-      val s = searcher.withSimilarity(graft.search.LMJelinekMercerSim())
-      s.searchDoubleDS(s.parse("batch"), 10).toDF()
-        .join(DocsIndex.docIdMap(index), "docId")
-        .orderBy(desc("score"), asc("doc_id"))
-        .limit(10)
-        .select(col("doc_id"), col("score"))
-    }),
+    "ft_search_lmjm" -> ((spark, sfDir) =>
+      hitsDoubleDF(
+        searcherOf(spark, sfDir).withSimilarity(graft.search.LMJelinekMercerSim()),
+        "batch", 10)),
     // DFI (standardized) top-10 (reference: DFISimilarity.java:55-65,
     // IndependenceStandardized.java:28-30)
-    "ft_search_dfi" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir)
-      val s = searcher.withSimilarity(graft.search.DFISim())
-      s.searchDoubleDS(s.parse("vector"), 10).toDF()
-        .join(DocsIndex.docIdMap(index), "docId")
-        .orderBy(desc("score"), asc("doc_id"))
-        .limit(10)
-        .select(col("doc_id"), col("score"))
-    }),
+    "ft_search_dfi" -> ((spark, sfDir) =>
+      hitsDoubleDF(searcherOf(spark, sfDir).withSimilarity(graft.search.DFISim()), "vector", 10)),
     // DFI with the Saturated independence measure (f−e)/e (reference:
     // lucene/core/.../similarities/IndependenceSaturated.java:28-31)
-    "ft_search_dfi_sat" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir)
-      val s = searcher.withSimilarity(graft.search.DFISim("sat"))
-      s.searchDoubleDS(s.parse("table"), 10).toDF()
-        .join(DocsIndex.docIdMap(index), "docId")
-        .orderBy(desc("score"), asc("doc_id")).limit(10)
-        .select(col("doc_id"), col("score"))
-    }),
+    "ft_search_dfi_sat" -> ((spark, sfDir) =>
+      hitsDoubleDF(
+        searcherOf(spark, sfDir).withSimilarity(graft.search.DFISim("sat")),
+        "table", 10)),
     // DFI with the ChiSquared measure (f−e)²/e (reference:
     // lucene/core/.../similarities/IndependenceChiSquared.java:28-31)
-    "ft_search_dfi_chi" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir)
-      val s = searcher.withSimilarity(graft.search.DFISim("chi"))
-      s.searchDoubleDS(s.parse("merge"), 10).toDF()
-        .join(DocsIndex.docIdMap(index), "docId")
-        .orderBy(desc("score"), asc("doc_id")).limit(10)
-        .select(col("doc_id"), col("score"))
-    }),
+    "ft_search_dfi_chi" -> ((spark, sfDir) =>
+      hitsDoubleDF(
+        searcherOf(spark, sfDir).withSimilarity(graft.search.DFISim("chi")),
+        "merge", 10)),
     // DFR G-B-H1 (BasicModelG.java:36-51, AfterEffectB.java:31-36,
     // NormalizationH1.java:56-58): geometric Bose-Einstein with the
     // bonus-after-effect and linear length normalization.
-    "ft_search_dfr_gb1" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir)
-      val s = searcher.withSimilarity(graft.search.DFRGB1Sim())
-      s.searchDoubleDS(s.parse("batch"), 10).toDF()
-        .join(DocsIndex.docIdMap(index), "docId")
-        .orderBy(desc("score"), asc("doc_id")).limit(10)
-        .select(col("doc_id"), col("score"))
-    }),
+    "ft_search_dfr_gb1" -> ((spark, sfDir) =>
+      hitsDoubleDF(searcherOf(spark, sfDir).withSimilarity(graft.search.DFRGB1Sim()), "batch", 10)),
     // IB SPL-TTF-H2 (DistributionSPL.java:36-59, LambdaTTF.java:31-38):
     // smoothed power-law information model.
-    "ft_search_ib_spl" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir)
-      val s = searcher.withSimilarity(graft.search.IBSPLSim())
-      s.searchDoubleDS(s.parse("scan"), 10).toDF()
-        .join(DocsIndex.docIdMap(index), "docId")
-        .orderBy(desc("score"), asc("doc_id")).limit(10)
-        .select(col("doc_id"), col("score"))
-    }),
+    "ft_search_ib_spl" -> ((spark, sfDir) =>
+      hitsDoubleDF(searcherOf(spark, sfDir).withSimilarity(graft.search.IBSPLSim()), "scan", 10)),
     // Axiomatic F2-LOG (AxiomaticF2LOG.java:61-79 — ln idf, same tfln)
-    "ft_search_axiomatic_f2log" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir)
-      val s = searcher.withSimilarity(graft.search.AxiomaticF2LOGSim())
-      s.searchDoubleDS(s.parse("line"), 10).toDF()
-        .join(DocsIndex.docIdMap(index), "docId")
-        .orderBy(desc("score"), asc("doc_id")).limit(10)
-        .select(col("doc_id"), col("score"))
-    }),
+    "ft_search_axiomatic_f2log" -> ((spark, sfDir) =>
+      hitsDoubleDF(
+        searcherOf(spark, sfDir).withSimilarity(graft.search.AxiomaticF2LOGSim()),
+        "line", 10)),
     // MultiSimilarity CombSUM (lucene/core/.../similarities/
     // MultiSimilarity.java:34-58): BM25 + Classic summed per (freq, norm)
     // for the SAME term — unlike ft_perfield_sim's per-clause sims.
-    "ft_search_multisim" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir)
-      val s = searcher.withSimilarity(graft.search.MultiSim(
-        Seq(graft.search.Bm25Sim(1.2f, 0.75f), graft.search.ClassicSim)))
-      s.searchDoubleDS(s.parse("window"), 10).toDF()
-        .join(DocsIndex.docIdMap(index), "docId")
-        .orderBy(desc("score"), asc("doc_id")).limit(10)
-        .select(col("doc_id"), col("score"))
-    }),
+    "ft_search_multisim" -> ((spark, sfDir) =>
+      hitsDoubleDF(
+        searcherOf(spark, sfDir).withSimilarity(graft.search.MultiSim(
+          Seq(graft.search.Bm25Sim(1.2f, 0.75f), graft.search.ClassicSim))),
+        "window", 10)),
     // DFR InL2 (reference: DFRSimilarity.java:110-114, BasicModelIn.java:36-43,
     // AfterEffectL.java:32-34, NormalizationH2.java:58-59) top-10
-    "ft_search_dfr" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir)
-      val s = searcher.withSimilarity(graft.search.DFRInL2Sim())
-      s.searchDoubleDS(s.parse("merge"), 10).toDF()
-        .join(DocsIndex.docIdMap(index), "docId")
-        .orderBy(desc("score"), asc("doc_id"))
-        .limit(10)
-        .select(col("doc_id"), col("score"))
-    }),
+    "ft_search_dfr" -> ((spark, sfDir) =>
+      hitsDoubleDF(
+        searcherOf(spark, sfDir).withSimilarity(graft.search.DFRInL2Sim()),
+        "merge", 10)),
     // IB LL-D-H2 (reference: IBSimilarity.java score, DistributionLL.java:33-34,
     // LambdaDF.java:36-38, NormalizationH2.java:58-59) top-10
-    "ft_search_ib" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir)
-      val s = searcher.withSimilarity(graft.search.IBLLSim())
-      s.searchDoubleDS(s.parse("window"), 10).toDF()
-        .join(DocsIndex.docIdMap(index), "docId")
-        .orderBy(desc("score"), asc("doc_id"))
-        .limit(10)
-        .select(col("doc_id"), col("score"))
-    }),
+    "ft_search_ib" -> ((spark, sfDir) =>
+      hitsDoubleDF(searcherOf(spark, sfDir).withSimilarity(graft.search.IBLLSim()), "window", 10)),
     // Axiomatic F2EXP (reference: Axiomatic.java:104-110,
     // AxiomaticF2EXP.java:61-94; s=0.25, k=0.35) top-10
-    "ft_search_axiomatic" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir)
-      val s = searcher.withSimilarity(graft.search.AxiomaticF2EXPSim())
-      s.searchDoubleDS(s.parse("sort"), 10).toDF()
-        .join(DocsIndex.docIdMap(index), "docId")
-        .orderBy(desc("score"), asc("doc_id"))
-        .limit(10)
-        .select(col("doc_id"), col("score"))
-    }),
+    "ft_search_axiomatic" -> ((spark, sfDir) =>
+      hitsDoubleDF(
+        searcherOf(spark, sfDir).withSimilarity(graft.search.AxiomaticF2EXPSim()),
+        "sort", 10)),
     // BooleanSimilarity: score = Σ boosts of matched SHOULD clauses
     // (reference: BooleanSimilarity.java:59-61); exercises boost-passthrough
     // and the disjunction's clause-order sum under a non-default Similarity
-    "ft_search_boolsim" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir)
-      val s = searcher.withSimilarity(graft.search.BooleanSim)
-      s.searchDoubleDS(s.parse("vector^1.5 OR batch"), 10).toDF()
-        .join(DocsIndex.docIdMap(index), "docId")
-        .orderBy(desc("score"), asc("doc_id"))
-        .limit(10)
-        .select(col("doc_id"), col("score"))
-    }),
+    "ft_search_boolsim" -> ((spark, sfDir) =>
+      hitsDoubleDF(
+        searcherOf(spark, sfDir).withSimilarity(graft.search.BooleanSim),
+        "vector^1.5 OR batch", 10)),
     // QueryElevationComponent (solr/core/.../QueryElevationComponent.java:
     // 630-673 priority = size..1 in config order, :514-527 exclusions as
     // mustNot, :529-555 sort = priority desc then score): elevated docs are
@@ -1381,14 +1227,9 @@ object FulltextQueries {
     }),
     // BM25 top-10 over the ShingleFilter bigram index: the posting term is
     // 'big_table', doc length/norms/avgdl are all over the shingle stream
-    "ft_shingle_search" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.Shingled)
-      searcher.searchDoubleDS(graft.search.TermQ("big_table"), 10).toDF()
-        .join(DocsIndex.docIdMap(index), "docId")
-        .orderBy(desc("score"), asc("doc_id"))
-        .limit(10)
-        .select(col("doc_id"), col("score"))
-    }),
+    "ft_shingle_search" -> ((spark, sfDir) =>
+      hitsDoubleDF(searcherOf(spark, sfDir, DocsIndex.Shingled),
+        graft.search.TermQ("big_table"), 10)),
     // ---- WordDelimiterGraphFilter (code-identifier) index: the corpus
     // camelCase-compounded deterministically (DocsIndex.camelize), each
     // compound indexed as preserved-original + case-split parts, parts at
@@ -1396,116 +1237,87 @@ object FulltextQueries {
     // BM25 for a PART term: tf('vector') = raw occurrences (each raw token
     // surfaces exactly once, as a part or bare) + any compound whose concat
     // equals the term; dl = discountOverlaps length = raw token count
-    "ft_wd_search" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.WordDelim)
-      searcher.searchDoubleDS(graft.search.TermQ("vector"), 10).toDF()
-        .join(DocsIndex.docIdMap(index), "docId")
-        .orderBy(desc("score"), asc("doc_id"))
-        .limit(10)
-        .select(col("doc_id"), col("score"))
-    }),
+    "ft_wd_search" -> ((spark, sfDir) =>
+      hitsDoubleDF(searcherOf(spark, sfDir, DocsIndex.WordDelim),
+        graft.search.TermQ("vector"), 10)),
     // BM25 for the PRESERVED ORIGINAL: 'fasthash' matches only where the
     // raw pair ('fast','hash') landed on a pair boundary (odd 1-indexed i)
-    "ft_wd_compound" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.WordDelim)
-      searcher.searchDoubleDS(graft.search.TermQ("fasthash"), 10).toDF()
-        .join(DocsIndex.docIdMap(index), "docId")
-        .orderBy(desc("score"), asc("doc_id"))
-        .limit(10)
-        .select(col("doc_id"), col("score"))
-    }),
+    "ft_wd_compound" -> ((spark, sfDir) =>
+      hitsDoubleDF(searcherOf(spark, sfDir, DocsIndex.WordDelim),
+        graft.search.TermQ("fasthash"), 10)),
     // exact phrase over PARTS: wd part positions equal raw-text positions,
     // so "fast hash" matches every raw adjacency — inside one compound
     // (fastHash) AND across two compounds (…Fast hash…) alike
-    "ft_wd_phrase" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.WordDelim)
-      searcher.matchesDS(graft.search.PhraseQ(Seq("fast", "hash"), Seq(0, 1))).toDF("docId")
-        .join(DocsIndex.docIdMap(index), "docId")
-        .select(col("doc_id"))
-        .orderBy("doc_id")
-    }),
-    "ft_search_bool" -> ((spark, sfDir) => hitsDoubleDF(spark, sfDir, "(table OR vector) AND batch", 10)),
+    "ft_wd_phrase" -> ((spark, sfDir) =>
+      matchDF(searcherOf(spark, sfDir, DocsIndex.WordDelim),
+        graft.search.PhraseQ(Seq("fast", "hash"), Seq(0, 1)))),
+    "ft_search_bool" -> ((spark, sfDir) =>
+      hitsDoubleDF(searcherOf(spark, sfDir), "(table OR vector) AND batch", 10)),
     // prohibited clause through the SCORED path: MUST_NOT filters, never
     // contributes score (BooleanWeight: prohibited scorers are
     // two-phase-excluded, reqExcl)
-    "ft_search_not" -> ((spark, sfDir) => hitsDoubleDF(spark, sfDir, "vector AND NOT table", 10)),
+    "ft_search_not" -> ((spark, sfDir) =>
+      hitsDoubleDF(searcherOf(spark, sfDir), "vector AND NOT table", 10)),
     // minimumNumberShouldMatch through the SCORED path (Boolean2ScorerSupplier
     // -> MinShouldMatchSumScorer: docs matching >= msm optional clauses,
     // score = sum over the MATCHING clauses only)
     "ft_search_msm" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir)
+      val searcher = searcherOf(spark, sfDir)
       val q = graft.search.BoolQ(
         should = Seq(graft.search.TermQ("vector"), graft.search.TermQ("customer"),
           graft.search.TermQ("hash")),
         minShouldMatch = 2)
-      searcher.searchDoubleDS(q, 10).toDF()
-        .join(DocsIndex.docIdMap(index), "docId")
-        .orderBy(desc("score"), asc("doc_id"))
-        .limit(10)
-        .select(col("doc_id"), col("score"))
+      hitsDoubleDF(searcher, q, 10)
     }),
-    "ft_search_phrase" -> ((spark, sfDir) => hitsDoubleDF(spark, sfDir, "\"big table\" OR customer", 10)),
+    "ft_search_phrase" -> ((spark, sfDir) =>
+      hitsDoubleDF(searcherOf(spark, sfDir), "\"big table\" OR customer", 10)),
     // sloppy phrase scored: BM25 over the sloppy phrase frequency
-    "ft_search_sloppy" -> ((spark, sfDir) => hitsDoubleDF(spark, sfDir, "\"big table\"~2", 10)),
+    "ft_search_sloppy" -> ((spark, sfDir) =>
+      hitsDoubleDF(searcherOf(spark, sfDir), "\"big table\"~2", 10)),
     // DisjunctionMax: max of per-field/per-term scores + tieBreak * others
     "ft_search_dismax" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir)
+      val searcher = searcherOf(spark, sfDir)
       val q = graft.search.DisMaxQ(
         Seq(graft.search.TermQ("vector"), graft.search.TermQ("customer")), 0.5f)
-      searcher.searchDoubleDS(q, 10).toDF()
-        .join(DocsIndex.docIdMap(index), "docId")
-        .orderBy(desc("score"), asc("doc_id")).limit(10)
-        .select(col("doc_id"), col("score"))
+      hitsDoubleDF(searcher, q, 10)
     }),
     // BlendedTermQuery: both clauses scored with the blended (max) df, then
     // DisjunctionMax(0.5) — distinct from dismax (per-term dfs) and from
     // synonym (merged pseudo-term)
     "ft_search_blended" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir)
+      val searcher = searcherOf(spark, sfDir)
       val q = graft.search.BlendedTermQ(Seq("vector", "customer"), 0.5f)
-      searcher.searchDoubleDS(q, 10).toDF()
-        .join(DocsIndex.docIdMap(index), "docId")
-        .orderBy(desc("score"), asc("doc_id")).limit(10)
-        .select(col("doc_id"), col("score"))
+      hitsDoubleDF(searcher, q, 10)
     }),
     // BoostQuery scored: ^2 multiplies the clause weight BEFORE the idf
     // product (DoubleScorer.weightD = boost * idf), oracle-recomputed
     "ft_search_boost" -> ((spark, sfDir) =>
-      hitsDoubleDF(spark, sfDir, "vector^2.0 OR customer", 10)),
+      hitsDoubleDF(searcherOf(spark, sfDir), "vector^2.0 OR customer", 10)),
     // SynonymQuery: terms scored as one pseudo-term
     "ft_search_synonym" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir)
+      val searcher = searcherOf(spark, sfDir)
       val q = graft.search.SynonymQ(Seq("spark", "query"))
-      searcher.searchDoubleDS(q, 10).toDF()
-        .join(DocsIndex.docIdMap(index), "docId")
-        .orderBy(desc("score"), asc("doc_id")).limit(10)
-        .select(col("doc_id"), col("score"))
+      hitsDoubleDF(searcher, q, 10)
     }),
     // TOP_TERMS_SCORING_BOOLEAN_REWRITE: fuzzy expansion as SCORED clauses —
     // each matching dictionary term boosted by similarity 1 − dist/min(len)
     // ('sort'→1.0, 'part'→0.5 here), BM25-scored and summed, instead of the
     // CONSTANT_SCORE union ft_match_fuzzy pins
     "ft_search_fuzzy_scored" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir)
+      val searcher = searcherOf(spark, sfDir)
       val q = searcher.scoringRewrite(graft.search.FuzzyQ("sort", 2), 5)
-      searcher.searchDoubleDS(q, 10).toDF()
-        .join(DocsIndex.docIdMap(index), "docId")
-        .orderBy(desc("score"), asc("doc_id")).limit(10)
-        .select(col("doc_id"), col("score"))
+      hitsDoubleDF(searcher, q, 10)
     }),
     // searchAfter pagination: page 2 of the 'vector' ranking
     "ft_search_after" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir)
+      val searcher = searcherOf(spark, sfDir)
       val q = searcher.parse("vector")
       val page1 = searcher.searchDouble(q, 10)
       if (page1.isEmpty) {
         // empty first page -> empty second page (don't dereference .last)
         spark.createDataFrame(Seq.empty[(Long, Double)]).toDF("doc_id", "score")
       } else {
-        searcher.searchDoubleDS(q, 10, page1.last).toDF()
-          .join(DocsIndex.docIdMap(index), "docId")
-          .orderBy(desc("score"), asc("doc_id")).limit(10)
-          .select(col("doc_id"), col("score"))
+        hitsDoubleDF(searcher, q, 10, page1.last)
       }
     }),
     // percolator / lucene-monitor: standing queries evaluated against every
@@ -1531,13 +1343,8 @@ object FulltextQueries {
     // big and table sit TWO raw positions apart with anything between —
     // 29 docs here vs 24 for the adjacent phrase, so a gap-less
     // implementation provably fails this row
-    "ft_stop_phrase" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.English)
-      searcher.matchesDS(searcher.parse("\"big the table\"")).toDF("docId")
-        .join(DocsIndex.docIdMap(index), "docId")
-        .select(col("doc_id"))
-        .orderBy("doc_id")
-    }),
+    "ft_stop_phrase" -> ((spark, sfDir) =>
+      matchDF(searcherOf(spark, sfDir, DocsIndex.English), "\"big the table\"")),
     // stopwords are dropped at BOTH index and query time: 'the' analyzes to
     // nothing, so "the OR value" degenerates to the 'value' term query
     "ft_stop_count" -> ((spark, sfDir) => {
@@ -1549,13 +1356,8 @@ object FulltextQueries {
     // with Analyzers.standard (Analyzer.scala:38-133); the corpus is pure
     // [a-z0-9 ] text, so tokenization — and therefore df/avgdl/norms/tf and
     // every score — must agree with the SQL-expressible simple analyzer
-    "ft_uax_search" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.Standard)
-      searcher.searchDoubleDS(searcher.parse("vector"), 10).toDF()
-        .join(DocsIndex.docIdMap(index), "docId")
-        .orderBy(desc("score"), asc("doc_id")).limit(10)
-        .select(col("doc_id"), col("score"))
-    }),
+    "ft_uax_search" -> ((spark, sfDir) =>
+      hitsDoubleDF(searcherOf(spark, sfDir, DocsIndex.Standard), "vector", 10)),
     // ASCIIFoldingFilter under the hard oracle (reference: lucene/analysis/
     // common/src/java/org/apache/lucene/analysis/miscellaneous/
     // ASCIIFoldingFilter.java): the corpus is deterministically accented
@@ -1563,13 +1365,8 @@ object FulltextQueries {
     // ASCIIFolding; searching the unaccented 'table' must read the folded
     // posting list with BM25 stats identical to the unaccented corpus —
     // the oracle re-accents in SQL and folds with DuckDB strip_accents.
-    "ft_ascii_fold" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.Folded)
-      searcher.searchDoubleDS(searcher.parse("table"), 10).toDF()
-        .join(DocsIndex.docIdMap(index), "docId")
-        .orderBy(desc("score"), asc("doc_id")).limit(10)
-        .select(col("doc_id"), col("score"))
-    }),
+    "ft_ascii_fold" -> ((spark, sfDir) =>
+      hitsDoubleDF(searcherOf(spark, sfDir, DocsIndex.Folded), "table", 10)),
     // HTMLStripCharFilter under the hard oracle (reference: lucene/analysis/
     // common/src/java/org/apache/lucene/analysis/charfilter/
     // HTMLStripCharFilter.jflex): the corpus is wrapped in deterministic
@@ -1577,61 +1374,32 @@ object FulltextQueries {
     // char filter must remove ALL of it before tokenization — a leaked
     // 'html'/'body'/'class'/'b'/'amp' token would inflate doc lengths and
     // shift every norm; the oracle strips the same markup in SQL.
-    "ft_html_strip" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.Html)
-      searcher.searchDoubleDS(searcher.parse("table"), 10).toDF()
-        .join(DocsIndex.docIdMap(index), "docId")
-        .orderBy(desc("score"), asc("doc_id")).limit(10)
-        .select(col("doc_id"), col("score"))
-    }),
+    "ft_html_strip" -> ((spark, sfDir) =>
+      hitsDoubleDF(searcherOf(spark, sfDir, DocsIndex.Html), "table", 10)),
     // EnglishMinimalStemFilter (Harman S-stemmer) under the hard oracle:
     // index + query analysis both stem, so searching the plural 'tables'
     // reads the 'table' posting list; BM25 stats (df/tf) are post-stem
-    "ft_stem_search" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.Stemmed)
-      searcher.searchDoubleDS(searcher.parse("tables"), 10).toDF()
-        .join(DocsIndex.docIdMap(index), "docId")
-        .orderBy(desc("score"), asc("doc_id")).limit(10)
-        .select(col("doc_id"), col("score"))
-    }),
+    "ft_stem_search" -> ((spark, sfDir) =>
+      hitsDoubleDF(searcherOf(spark, sfDir, DocsIndex.Stemmed), "tables", 10)),
     // the ies->y stemmer arm on both sides: 'queries' -> 'query' at query
     // time, and every pluralized 'queries' token in the corpus stems back
-    "ft_stem_match" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.Stemmed)
-      searcher.matchesDS(searcher.parse("queries")).toDF("docId")
-        .join(DocsIndex.docIdMap(index), "docId")
-        .select(col("doc_id")).orderBy("doc_id")
-    }),
+    "ft_stem_match" -> ((spark, sfDir) =>
+      matchDF(searcherOf(spark, sfDir, DocsIndex.Stemmed), "queries")),
     // CJK bigram chain: the two-ideograph query 数据 analyzes to ONE bigram
     // term whose postings exist only where the injected Han run 数据流
     // produced the 数据+据流 bigrams; BM25 stats over the bigrammed stream
-    "ft_cjk_search" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.Cjk)
-      searcher.searchDoubleDS(searcher.parse("数据"), 10).toDF()
-        .join(DocsIndex.docIdMap(index), "docId")
-        .orderBy(desc("score"), asc("doc_id")).limit(10)
-        .select(col("doc_id"), col("score"))
-    }),
+    "ft_cjk_search" -> ((spark, sfDir) =>
+      hitsDoubleDF(searcherOf(spark, sfDir, DocsIndex.Cjk), "数据", 10)),
     // a lone ideograph (键) is NOT bigrammed — unigram postings
-    "ft_cjk_unigram" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.Cjk)
-      searcher.matchesDS(searcher.parse("键")).toDF("docId")
-        .join(DocsIndex.docIdMap(index), "docId")
-        .select(col("doc_id")).orderBy("doc_id")
-    }),
+    "ft_cjk_unigram" -> ((spark, sfDir) => matchDF(searcherOf(spark, sfDir, DocsIndex.Cjk), "键")),
     // dictionary longest-match CJK segmentation (kuromoji-lite; reference:
     // lucene/analysis/kuromoji/.../ja/JapaneseTokenizer.java mode NORMAL —
     // known lexicon words win, unknown spans fall back to character
     // handling): query terms are one DICT word (数据流) and one OOV-tail
     // BIGRAM (储器); both posting lists exist only because segmentation
     // split the injected runs exactly there
-    "ft_cjk_dict_search" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.CjkDict)
-      searcher.searchDoubleDS(searcher.parse("数据流 OR 储器"), 10).toDF()
-        .join(DocsIndex.docIdMap(index), "docId")
-        .orderBy(desc("score"), asc("doc_id")).limit(10)
-        .select(col("doc_id"), col("score"))
-    }),
+    "ft_cjk_dict_search" -> ((spark, sfDir) =>
+      hitsDoubleDF(searcherOf(spark, sfDir, DocsIndex.CjkDict), "数据流 OR 储器", 10)),
     // whole-dictionary audit of the segmented index: every term with
     // df/ttf — any run the segmenter splits differently from the oracle's
     // hand-derived run map surfaces here
@@ -1660,54 +1428,31 @@ object FulltextQueries {
     // query term 'bigtable' never occurs in text — its posting list exists
     // only where the graph matched consecutive big/table positions; tf =
     // pair count, doc length unchanged (stacked token, discountOverlaps)
-    "ft_syn_graph_term" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.SynGraph)
-      searcher.searchDoubleDS(searcher.parse("bigtable"), 10).toDF()
-        .join(DocsIndex.docIdMap(index), "docId")
-        .orderBy(desc("score"), asc("doc_id")).limit(10)
-        .select(col("doc_id"), col("score"))
-    }),
+    "ft_syn_graph_term" -> ((spark, sfDir) =>
+      hitsDoubleDF(searcherOf(spark, sfDir, DocsIndex.SynGraph), "bigtable", 10)),
     // SynonymGraphFilter multi-word OUTPUT (`mergejoin => merge join`): the
     // phrase "merge join" matches INSIDE the flattened expansion; BM25 over
     // phrase freq with the +1-per-expansion doc length the inserted
     // position creates
-    "ft_syn_graph_phrase" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.SynGraphExpand)
-      searcher.searchDoubleDS(searcher.parse("\"merge join\""), 10).toDF()
-        .join(DocsIndex.docIdMap(index), "docId")
-        .orderBy(desc("score"), asc("doc_id")).limit(10)
-        .select(col("doc_id"), col("score"))
-    }),
+    "ft_syn_graph_phrase" -> ((spark, sfDir) =>
+      hitsDoubleDF(searcherOf(spark, sfDir, DocsIndex.SynGraphExpand), "\"merge join\"", 10)),
     // the expansion's inserted position shifts every later token: "join
     // batch" matches across the expansion boundary (originally "merge
     // batch") and on natural adjacent join/batch pairs — both only line up
     // if the flatten shift is applied
-    "ft_syn_graph_shift" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.SynGraphExpand)
-      searcher.matchesDS(searcher.parse("\"join batch\"")).toDF("docId")
-        .join(DocsIndex.docIdMap(index), "docId")
-        .select(col("doc_id")).orderBy("doc_id")
-    }),
+    "ft_syn_graph_shift" -> ((spark, sfDir) =>
+      matchDF(searcherOf(spark, sfDir, DocsIndex.SynGraphExpand), "\"join batch\"")),
     // Full EnglishAnalyzer chain (stop + Porter) under the hard oracle:
     // neither query word appears in the corpus — 'relates' reaches the
     // 'relat' (<- 'relational') posting list and 'oscillator' the 'oscil'
     // (<- 'oscillating') list only through the stemmer; BM25 stats are
     // post-stop post-stem
-    "ft_porter_search" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.Porter)
-      searcher.searchDoubleDS(searcher.parse("relates OR oscillator"), 10).toDF()
-        .join(DocsIndex.docIdMap(index), "docId")
-        .orderBy(desc("score"), asc("doc_id")).limit(10)
-        .select(col("doc_id"), col("score"))
-    }),
+    "ft_porter_search" -> ((spark, sfDir) =>
+      hitsDoubleDF(searcherOf(spark, sfDir, DocsIndex.Porter), "relates OR oscillator", 10)),
     // 'generalize' -> step3 ALIZE->AL -> step4 AL-> = 'gener', the stem of
     // the corpus form 'generalizations' (the paper's own worked example)
-    "ft_porter_match" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.Porter)
-      searcher.matchesDS(searcher.parse("generalize")).toDF("docId")
-        .join(DocsIndex.docIdMap(index), "docId")
-        .select(col("doc_id")).orderBy("doc_id")
-    }),
+    "ft_porter_match" -> ((spark, sfDir) =>
+      matchDF(searcherOf(spark, sfDir, DocsIndex.Porter), "generalize")),
     // whole-dictionary audit of the Porter index: every distinct stem with
     // df/ttf — any corpus word the engine stems differently from the
     // oracle's hand-derived paper map surfaces here
@@ -1737,13 +1482,8 @@ object FulltextQueries {
     // surface forms were Ｔāblé / ＶÉCTÖR in the source text — the match
     // exists only because NFKC width folding + case fold + accent strip
     // ran at index time; stats (df/tf/norms) are post-fold
-    "ft_icu_search" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.Icu)
-      searcher.searchDoubleDS(searcher.parse("table OR vector"), 10).toDF()
-        .join(DocsIndex.docIdMap(index), "docId")
-        .orderBy(desc("score"), asc("doc_id")).limit(10)
-        .select(col("doc_id"), col("score"))
-    }),
+    "ft_icu_search" -> ((spark, sfDir) =>
+      hitsDoubleDF(searcherOf(spark, sfDir, DocsIndex.Icu), "table OR vector", 10)),
     // Snowball German chain over the per-language index (DocsIndex.
     // LangStem): the query surfaces 'hauses'/'wanderungen' appear in NO
     // document — they reach the 'haus'/'wander' posting lists (from
@@ -1753,10 +1493,7 @@ object FulltextQueries {
     "ft_stem_de_search" -> ((spark, sfDir) => {
       val (index, _) = DocsIndex.get(spark, sfDir, DocsIndex.LangStem)
       val searcher = new graft.search.GraftSearcher(index, graft.analysis.Analyzers.german)
-      searcher.searchDoubleDS(searcher.parse("hauses OR wanderungen"), 10).toDF()
-        .join(DocsIndex.docIdMap(index), "docId")
-        .orderBy(desc("score"), asc("doc_id")).limit(10)
-        .select(col("doc_id"), col("score"))
+      hitsDoubleDF(searcher, "hauses OR wanderungen", 10)
     }),
     // minimal-French chain, same index: 'donner'/'porter' → 'don'/'port'
     // posting lists fed by injected 'données'/'portes' in fr docs (é-drop +
@@ -1764,10 +1501,7 @@ object FulltextQueries {
     "ft_stem_fr_search" -> ((spark, sfDir) => {
       val (index, _) = DocsIndex.get(spark, sfDir, DocsIndex.LangStem)
       val searcher = new graft.search.GraftSearcher(index, graft.analysis.Analyzers.frenchMinimal)
-      searcher.searchDoubleDS(searcher.parse("donner OR porter"), 10).toDF()
-        .join(DocsIndex.docIdMap(index), "docId")
-        .orderBy(desc("score"), asc("doc_id")).limit(10)
-        .select(col("doc_id"), col("score"))
+      hitsDoubleDF(searcher, "donner OR porter", 10)
     }),
     // whole-dictionary audit of the per-language index: every term with
     // df/ttf — any token either language chain stems differently from the
@@ -1784,13 +1518,8 @@ object FulltextQueries {
     // IncrementalIndexer micro-batches then compacted to one segment must
     // score identically to the single-shot build (same oracle SQL as
     // ft_search_term)
-    "ft_incr_search" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.Incremental)
-      searcher.searchDoubleDS(searcher.parse("vector"), 10).toDF()
-        .join(DocsIndex.docIdMap(index), "docId")
-        .orderBy(desc("score"), asc("doc_id")).limit(10)
-        .select(col("doc_id"), col("score"))
-    }),
+    "ft_incr_search" -> ((spark, sfDir) =>
+      hitsDoubleDF(searcherOf(spark, sfDir, DocsIndex.Incremental), "vector", 10)),
     // FunctionScoreQuery (reference: lucene/queries/src/java/org/apache/
     // lucene/queries/function/FunctionScoreQuery.java:47-76): final score =
     // BM25 · (1 + len/100), a docvalue-derived factor. An unbounded custom
@@ -1848,13 +1577,8 @@ object FulltextQueries {
     // is NOT expressible as a bool-over-fields query (dismax/sum change both
     // idf and length normalization). 'src7' matches only via the title legs;
     // 'table' via the body — one ranked list across both.
-    "ft_combined" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.Combined)
-      searcher.searchDoubleDS(searcher.parse("table OR src7"), 10).toDF()
-        .join(DocsIndex.docIdMap(index), "docId")
-        .orderBy(desc("score"), asc("doc_id")).limit(10)
-        .select(col("doc_id"), col("score"))
-    }),
+    "ft_combined" -> ((spark, sfDir) =>
+      hitsDoubleDF(searcherOf(spark, sfDir, DocsIndex.Combined), "table OR src7", 10)),
     // match_phrase_prefix (reference: lucene/sandbox/src/java/org/apache/
     // lucene/sandbox/search/PhraseWildcardQuery.java:60-98): the trailing
     // prefix expands against the term DICTIONARY (termStats — one row per
@@ -1872,9 +1596,7 @@ object FulltextQueries {
         .orderBy("value").limit(64)
         .collect()
       val q = graft.search.Query.multiPhrase(Seq(Seq("fast"), exps.toSeq))
-      searcher.matchesDS(q).toDF("docId")
-        .join(DocsIndex.docIdMap(index), "docId")
-        .select(col("doc_id")).orderBy("doc_id")
+      matchDF(searcher, q)
     }),
     // ComplexPhraseQueryParser (reference: lucene/queryparser/src/java/org/
     // apache/lucene/queryparser/complexPhrase/ComplexPhraseQueryParser.java
@@ -1884,7 +1606,7 @@ object FulltextQueries {
     // exact MultiPhrase adjacency
     "ft_complex_phrase" -> ((spark, sfDir) => {
       import spark.implicits._
-      val (index, searcher) = DocsIndex.get(spark, sfDir)
+      val searcher = searcherOf(spark, sfDir)
       // expansion through the SymSpell delete band (O(variants) dictionary
       // rows, IN-pushdown) instead of a whole-dictionary typed-lambda scan
       // (r06; round-5 perf_weak #1) — identical term set: the band is a
@@ -1895,30 +1617,19 @@ object FulltextQueries {
         .orderBy("value").limit(64)
         .collect()
       val q = graft.search.Query.multiPhrase(Seq(Seq("batch"), exps.toSeq))
-      searcher.matchesDS(q).toDF("docId")
-        .join(DocsIndex.docIdMap(index), "docId")
-        .select(col("doc_id")).orderBy("doc_id")
+      matchDF(searcher, q)
     }),
     // index-time synonyms (Analyzers.synonymSlowFast scaladoc): 'fast'
     // postings absorbed every 'slow' occurrence at its position, so tf, df,
     // and BM25 stats all reflect the merged surface forms — querying the
     // single term 'fast' ranks docs that only say 'slow'
-    "ft_syn_search" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.Synonyms)
-      searcher.searchDoubleDS(searcher.parse("fast"), 10).toDF()
-        .join(DocsIndex.docIdMap(index), "docId")
-        .orderBy(desc("score"), asc("doc_id")).limit(10)
-        .select(col("doc_id"), col("score"))
-    }),
+    "ft_syn_search" -> ((spark, sfDir) =>
+      hitsDoubleDF(searcherOf(spark, sfDir, DocsIndex.Synonyms), "fast", 10)),
     // phrase across a synonym: the stacked token sits at the original's
     // position, so "fast table" matches "slow table" — SynonymGraphFilter's
     // defining positional property
-    "ft_syn_phrase" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.Synonyms)
-      searcher.matchesDS(searcher.parse("\"fast table\"")).toDF("docId")
-        .join(DocsIndex.docIdMap(index), "docId")
-        .select(col("doc_id")).orderBy("doc_id")
-    }),
+    "ft_syn_phrase" -> ((spark, sfDir) =>
+      matchDF(searcherOf(spark, sfDir, DocsIndex.Synonyms), "\"fast table\"")),
     // per-task build telemetry (DocsIndex.buildMetrics scaladoc): every
     // encode task recorded its partition/attempt lineage, docId span, and
     // postings/sec. The postings GRAND TOTAL is an engine-independent
@@ -2008,12 +1719,8 @@ object FulltextQueries {
     // org/apache/lucene/search/RegexpQuery.java — RegExp syntax `|`, `[]`;
     // fully ANCHORED like Lucene, so 'scan' matches but 'scanner' would
     // not): '(scan|sort|s[a-z]ow)' through the dictionary-first expansion.
-    "ft_match_regexp_alt" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir)
-      searcher.matchesDS(graft.search.RegexpQ("(scan|sort|s[a-z]ow)")).toDF("docId")
-        .join(DocsIndex.docIdMap(index), "docId")
-        .select(col("doc_id")).orderBy("doc_id")
-    }),
+    "ft_match_regexp_alt" -> ((spark, sfDir) =>
+      matchDF(searcherOf(spark, sfDir), graft.search.RegexpQ("(scan|sort|s[a-z]ow)"))),
     // Distributed IDF / ExactStatsCache (solr/core/src/java/org/apache/
     // solr/search/stats/ExactStatsCache.java:60-140 — per-shard scoring
     // with GLOBALLY merged stats, so sharded ranks equal the single-index
@@ -2029,12 +1736,10 @@ object FulltextQueries {
       val shards = graft.index.IndexStore.split(index,
         Seq(ids.filter(_ % 2 == 0), ids.filter(_ % 2 == 1)))
       shards.map { sh =>
-        new graft.search.GraftSearcher(sh, graft.analysis.Analyzers.simple, statsFrom = index)
-          .searchDoubleDS(q, 10).toDF()
+        hitsDoubleDF(
+          new GraftSearcher(sh, graft.analysis.Analyzers.simple, statsFrom = index), q, 10)
       }.reduce(_ unionByName _)
-        .join(DocsIndex.docIdMap(index), "docId")
         .orderBy(desc("score"), asc("doc_id")).limit(10)
-        .select(col("doc_id"), col("score"))
     }),
     // edismax pf phrase boosting (solr/core/src/java/org/apache/solr/
     // search/ExtendedDismaxQParser.java — the pf/pf2 implicit phrase: the
@@ -2171,7 +1876,9 @@ object FulltextQueries {
       val m = searcher.matchesDS(searcher.parse("spark")).toDF("docId")
       val mc = m.count()
       val nDocs = index.fieldStats.docCount
-      val pairs = index.blocks.as[BlockRow].flatMap { b =>
+      // docIds only, over every block: the one loop that skips `postings`,
+      // whose full decode would add positions for the whole dictionary
+      val pairs = index.blocks.flatMap { b =>
         val eb = b.toEncodedBlock
         PostingsCodec.decodeDocs(eb).iterator.map(d => (b.term, d))
       }.toDF("term", "docId")
@@ -2195,17 +1902,9 @@ object FulltextQueries {
     "ft_highlight" -> ((spark, sfDir) => {
       import spark.implicits._
       val (index, _) = DocsIndex.get(spark, sfDir)
-      val firstPos = index.blocks.filter($"term" === "vector").as[BlockRow]
-        .flatMap { b =>
-          val eb = b.toEncodedBlock
-          val docs = PostingsCodec.decodeDocs(eb)
-          val freqs = PostingsCodec.decodeFreqs(eb)
-          val poss = PostingsCodec.decodePositions(eb, freqs)
-          // index positions are 0-based; expose 1-based to match the oracle's
-          // list_position (also a hard check that stored positions = token order)
-          docs.indices.iterator.map(i => (docs(i), poss(i)(0) + 1L))
-        }.toDF("docId", "pos")
-      firstPos
+      // index positions are 0-based; expose 1-based to match the oracle's
+      // list_position (also a hard check that stored positions = token order)
+      postings(index, "vector").select($"docId", ($"positions"(0) + 1L).as("pos"))
         .join(DocsIndex.docIdMap(index), "docId")
         .join(DocsIndex.documents(spark, sfDir).select(col("doc_id"), col("text")), "doc_id")
         .withColumn("tk", expr("regexp_extract_all(lower(text), '[a-z0-9]+', 0)"))
@@ -2406,39 +2105,31 @@ object FulltextQueries {
     // with a total gap of at most 4 positions, ANY offsets — unlike a
     // sloppy phrase there is no expected-position template
     "ft_span_near" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir)
+      val searcher = searcherOf(spark, sfDir)
       val q = graft.search.SpanNearQ(Seq("query", "table"), 4, inOrder = true)
-      searcher.matchesDS(q).toDF("docId")
-        .join(DocsIndex.docIdMap(index), "docId")
-        .select(col("doc_id")).orderBy("doc_id")
+      matchDF(searcher, q)
     }),
     // 3-clause ordered span chain: spark < data < table, gap budget 6
     "ft_span_near3" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir)
+      val searcher = searcherOf(spark, sfDir)
       val q = graft.search.SpanNearQ(Seq("spark", "data", "table"), 6, inOrder = true)
-      searcher.matchesDS(q).toDF("docId")
-        .join(DocsIndex.docIdMap(index), "docId")
-        .select(col("doc_id")).orderBy("doc_id")
+      matchDF(searcher, q)
     }),
     // unordered span near (NearSpansUnordered): 'customer' and 'vector'
     // within a 5-position gap in either order
     "ft_span_unordered" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir)
+      val searcher = searcherOf(spark, sfDir)
       val q = graft.search.SpanNearQ(Seq("customer", "vector"), 5, inOrder = false)
-      searcher.matchesDS(q).toDF("docId")
-        .join(DocsIndex.docIdMap(index), "docId")
-        .select(col("doc_id")).orderBy("doc_id")
+      matchDF(searcher, q)
     }),
     // SpanOr clauses under SpanNear: (key|hash) then (table|value) within a
     // gap of 3, ordered — each slot's positions are the or-merge of its
     // member terms (SpanOrQuery.java under SpanNearQuery.java)
     "ft_span_or" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir)
+      val searcher = searcherOf(spark, sfDir)
       val q = graft.search.SpanOrNearQ(
         Seq(Seq("key", "hash"), Seq("table", "value")), 3, inOrder = true)
-      searcher.matchesDS(q).toDF("docId")
-        .join(DocsIndex.docIdMap(index), "docId")
-        .select(col("doc_id")).orderBy("doc_id")
+      matchDF(searcher, q)
     }),
     // Lucene intervals module, MINIMAL-interval semantics (reference:
     // lucene/queries/src/java/org/apache/lucene/queries/intervals/
@@ -2451,15 +2142,7 @@ object FulltextQueries {
     "ft_intervals" -> ((spark, sfDir) => {
       import spark.implicits._
       val (index, _) = DocsIndex.get(spark, sfDir)
-      def posOf(term: String) = index.blocks.filter($"term" === term)
-        .as[graft.index.BlockRow]
-        .flatMap { b =>
-          val eb = b.toEncodedBlock
-          val docs = PostingsCodec.decodeDocs(eb)
-          val freqs = PostingsCodec.decodeFreqs(eb)
-          val poss = PostingsCodec.decodePositions(eb, freqs)
-          docs.indices.iterator.map(i => (docs(i), poss(i)))
-        }
+      def posOf(term: String) = postings(index, term).select($"docId", $"positions")
       posOf("data").toDF("docId", "pa")
         .join(posOf("table").toDF("docId", "pb"), "docId")
         .as[(Long, Array[Int], Array[Int])]
@@ -2477,15 +2160,7 @@ object FulltextQueries {
     "ft_intervals_score" -> ((spark, sfDir) => {
       import spark.implicits._
       val (index, _) = DocsIndex.get(spark, sfDir)
-      def posOf(term: String) = index.blocks.filter($"term" === term)
-        .as[graft.index.BlockRow]
-        .flatMap { b =>
-          val eb = b.toEncodedBlock
-          val docs = PostingsCodec.decodeDocs(eb)
-          val freqs = PostingsCodec.decodeFreqs(eb)
-          val poss = PostingsCodec.decodePositions(eb, freqs)
-          docs.indices.iterator.map(i => (docs(i), poss(i)))
-        }
+      def posOf(term: String) = postings(index, term).select($"docId", $"positions")
       posOf("data").toDF("docId", "pa")
         .join(posOf("table").toDF("docId", "pb"), "docId")
         .as[(Long, Array[Int], Array[Int])]
@@ -2504,15 +2179,7 @@ object FulltextQueries {
     "ft_intervals_unordered" -> ((spark, sfDir) => {
       import spark.implicits._
       val (index, _) = DocsIndex.get(spark, sfDir)
-      def posOf(term: String) = index.blocks.filter($"term" === term)
-        .as[graft.index.BlockRow]
-        .flatMap { b =>
-          val eb = b.toEncodedBlock
-          val docs = PostingsCodec.decodeDocs(eb)
-          val freqs = PostingsCodec.decodeFreqs(eb)
-          val poss = PostingsCodec.decodePositions(eb, freqs)
-          docs.indices.iterator.map(i => (docs(i), poss(i)))
-        }
+      def posOf(term: String) = postings(index, term).select($"docId", $"positions")
       posOf("key").toDF("docId", "pa")
         .join(posOf("value").toDF("docId", "pb"), "docId")
         .as[(Long, Array[Int], Array[Int])]
@@ -2532,15 +2199,7 @@ object FulltextQueries {
     "ft_intervals_containing" -> ((spark, sfDir) => {
       import spark.implicits._
       val (index, _) = DocsIndex.get(spark, sfDir)
-      def posOf(term: String) = index.blocks.filter($"term" === term)
-        .as[graft.index.BlockRow]
-        .flatMap { b =>
-          val eb = b.toEncodedBlock
-          val docs = PostingsCodec.decodeDocs(eb)
-          val freqs = PostingsCodec.decodeFreqs(eb)
-          val poss = PostingsCodec.decodePositions(eb, freqs)
-          docs.indices.iterator.map(i => (docs(i), poss(i)))
-        }
+      def posOf(term: String) = postings(index, term).select($"docId", $"positions")
       posOf("data").toDF("docId", "pa")
         .join(posOf("table").toDF("docId", "pb"), "docId")
         .join(posOf("key").toDF("docId", "pk"), "docId")
@@ -2559,15 +2218,7 @@ object FulltextQueries {
     "ft_intervals_notcontaining" -> ((spark, sfDir) => {
       import spark.implicits._
       val (index, _) = DocsIndex.get(spark, sfDir)
-      def posOf(term: String) = index.blocks.filter($"term" === term)
-        .as[graft.index.BlockRow]
-        .flatMap { b =>
-          val eb = b.toEncodedBlock
-          val docs = PostingsCodec.decodeDocs(eb)
-          val freqs = PostingsCodec.decodeFreqs(eb)
-          val poss = PostingsCodec.decodePositions(eb, freqs)
-          docs.indices.iterator.map(i => (docs(i), poss(i)))
-        }
+      def posOf(term: String) = postings(index, term).select($"docId", $"positions")
       // LEFT join on the contained term: a doc with data→table intervals
       // but no 'key' at all keeps every interval (vacuously not-containing)
       posOf("data").toDF("docId", "pa")
@@ -2589,15 +2240,7 @@ object FulltextQueries {
     "ft_intervals_containedby" -> ((spark, sfDir) => {
       import spark.implicits._
       val (index, _) = DocsIndex.get(spark, sfDir)
-      def posOf(term: String) = index.blocks.filter($"term" === term)
-        .as[graft.index.BlockRow]
-        .flatMap { b =>
-          val eb = b.toEncodedBlock
-          val docs = PostingsCodec.decodeDocs(eb)
-          val freqs = PostingsCodec.decodeFreqs(eb)
-          val poss = PostingsCodec.decodePositions(eb, freqs)
-          docs.indices.iterator.map(i => (docs(i), poss(i)))
-        }
+      def posOf(term: String) = postings(index, term).select($"docId", $"positions")
       posOf("data").toDF("docId", "pa")
         .join(posOf("table").toDF("docId", "pb"), "docId")
         .join(posOf("key").toDF("docId", "pk"), "docId")
@@ -2616,15 +2259,7 @@ object FulltextQueries {
     "ft_intervals_block" -> ((spark, sfDir) => {
       import spark.implicits._
       val (index, _) = DocsIndex.get(spark, sfDir)
-      def posOf(term: String) = index.blocks.filter($"term" === term)
-        .as[graft.index.BlockRow]
-        .flatMap { b =>
-          val eb = b.toEncodedBlock
-          val docs = PostingsCodec.decodeDocs(eb)
-          val freqs = PostingsCodec.decodeFreqs(eb)
-          val poss = PostingsCodec.decodePositions(eb, freqs)
-          docs.indices.iterator.map(i => (docs(i), poss(i)))
-        }
+      def posOf(term: String) = postings(index, term).select($"docId", $"positions")
       posOf("data").toDF("docId", "pa")
         .join(posOf("table").toDF("docId", "pb"), "docId")
         .as[(Long, Array[Int], Array[Int])]
@@ -2645,15 +2280,7 @@ object FulltextQueries {
     "ft_passage" -> ((spark, sfDir) => {
       import spark.implicits._
       val (index, _) = DocsIndex.get(spark, sfDir)
-      val firstPos = index.blocks.filter($"term" === "vector").as[graft.index.BlockRow]
-        .flatMap { b =>
-          val eb = b.toEncodedBlock
-          val docs = PostingsCodec.decodeDocs(eb)
-          val freqs = PostingsCodec.decodeFreqs(eb)
-          val poss = PostingsCodec.decodePositions(eb, freqs)
-          docs.indices.iterator.map(i => (docs(i), poss(i)(0) + 1L)) // 1-based
-        }.toDF("docId", "p")
-      firstPos
+      postings(index, "vector").select($"docId", ($"positions"(0) + 1L).as("p")) // 1-based
         .join(DocsIndex.docIdMap(index), "docId")
         .join(DocsIndex.documents(spark, sfDir), "doc_id")
         .withColumn("tk", expr("regexp_extract_all(lower(text), '[a-z0-9]+', 0)"))
@@ -2667,42 +2294,15 @@ object FulltextQueries {
     // java/org/apache/lucene/search/BlendedTermQuery.java:1-360 — the
     // cross-field blending primitive: every term scores with the BLENDED
     // df = max over the set, combined by pure max): table/vector blended,
-    // tf off decoded postings, the PRELUDE dlq quantization re-expressed
-    // as a Spark expression
-    "ft_blended_term" -> ((spark, sfDir) => {
-      import spark.implicits._
-      val (index, _) = DocsIndex.get(spark, sfDir)
-      val n = index.fieldStats.docCount
-      val avgdl = index.fieldStats.sumTotalTermFreq.toDouble / n
-      val dfb = index.termStats.filter($"term".isin("table", "vector"))
-        .collect().map(_.docFreq).max
-      val idf = math.log(1.0 + (n - dfb + 0.5) / (dfb + 0.5))
-      termPos(spark, index, Seq("table", "vector"))
-        .groupBy("docId", "term").agg(count(lit(1)).as("tf"))
-        .join(index.docs.toDF().select($"docId", $"len"), "docId")
-        .withColumn("dlq", expr(
-          """CASE WHEN len < 24 THEN len
-            |     WHEN len - 24 < 8 THEN len
-            |     ELSE 24 + (((len - 24) >> (length(conv(len - 24, 10, 2)) - 4))
-            |                << (length(conv(len - 24, 10, 2)) - 4)) END""".stripMargin))
-        .withColumn("s", lit(idf) * ($"tf" * (lit(1.2) + lit(1))) /
-          ($"tf" + lit(1.2) * (lit(1) - lit(0.75) + lit(0.75) * $"dlq" / lit(avgdl))))
-        .groupBy("docId").agg(max($"s").as("smax"))
-        .select($"docId", round4Col($"smax").as("score"))
-        .join(DocsIndex.docIdMap(index), "docId")
-        .orderBy(desc("score"), asc("doc_id")).limit(10)
-        .select($"doc_id", $"score")
-    }),
+    // scored by the engine's double-mode BM25 over the quantized norms
+    "ft_blended_term" -> ((spark, sfDir) =>
+      hitsDoubleDF(searcherOf(spark, sfDir),
+        graft.search.BlendedTermQ(Seq("table", "vector"), 0f), 10)),
     // LengthFilter [4,8] chain under the hard oracle: the seven short
     // corpus words vanish, shrinking doc length/avgdl — BM25 for
     // 'customer' over the filtered stream
-    "ft_length_filter_search" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.LengthFiltered)
-      searcher.searchDoubleDS(searcher.parse("customer"), 10).toDF()
-        .join(DocsIndex.docIdMap(index), "docId")
-        .orderBy(desc("score"), asc("doc_id")).limit(10)
-        .select(col("doc_id"), col("score"))
-    }),
+    "ft_length_filter_search" -> ((spark, sfDir) =>
+      hitsDoubleDF(searcherOf(spark, sfDir, DocsIndex.LengthFiltered), "customer", 10)),
     // LukeRequestHandler index report (reference: solr/core/src/java/org/
     // apache/solr/handler/admin/LukeRequestHandler.java — the index-level
     // metadata block): doc/term/postings totals, each audited against the
@@ -2790,7 +2390,7 @@ object FulltextQueries {
         graft.codec.SmallFloat.byte4ToInt(d.norm.toByte).toDouble
       }
       val avgdl = index.fieldStats.sumTotalTermFreq.toDouble / n
-      val tf = termPos(spark, index, Seq("vector"))
+      val tf = termPos(index, "vector")
         .filter($"docId" === docId).count().toDouble
       val idf = math.log(1.0 + (n - df + 0.5) / (df + 0.5))
       val tfNorm = (tf * (1.2 + 1)) / (tf + 1.2 * (1 - 0.75 + 0.75 * dlq / avgdl))
@@ -2936,7 +2536,7 @@ object FulltextQueries {
         .collect().map(ts => ts.term -> ts.docFreq).toMap
       def idf(t: String): Double =
         math.log(1.0 + (n - dfs(t) + 0.5) / (dfs(t) + 0.5))
-      val wins = termPos(spark, index, Seq("merge", "table"))
+      val wins = termPos(index, "merge", "table")
         .withColumn("win", (col("p") / 20).cast("long"))
         .groupBy("docId", "win")
         .agg(
@@ -2964,14 +2564,11 @@ object FulltextQueries {
     // these clauses do not participate in scoring"): 'table' gates the match
     // as a boost-0 required clause, only 'vector' scores
     "ft_filter_clause" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir)
+      val searcher = searcherOf(spark, sfDir)
       val q = graft.search.BoolQ(must = Seq(
         graft.search.TermQ("vector"),
         graft.search.BoostQ(graft.search.TermQ("table"), 0f)))
-      searcher.searchDoubleDS(q, 10).toDF()
-        .join(DocsIndex.docIdMap(index), "docId")
-        .orderBy(desc("score"), asc("doc_id")).limit(10)
-        .select(col("doc_id"), col("score"))
+      hitsDoubleDF(searcher, q, 10)
     }),
     // field-sorted deep paging (TopFieldCollector after a FieldDoc,
     // reference: lucene/core/.../search/TopFieldCollector.java PagingField-
@@ -2993,11 +2590,9 @@ object FulltextQueries {
     // TermInSetQuery (ConstSetQ scaladoc): constant-score any-of filter —
     // the no-clause-limit shape large programmatic term filters take
     "ft_term_in_set" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir)
+      val searcher = searcherOf(spark, sfDir)
       val q = graft.search.ConstSetQ(Seq("dup", "elephant", "sort", "window"))
-      searcher.matchesDS(q).toDF("docId")
-        .join(DocsIndex.docIdMap(index), "docId")
-        .select(col("doc_id")).orderBy("doc_id")
+      matchDF(searcher, q)
     }),
     // Surround query language (reference: lucene/queryparser/src/java/org/
     // apache/lucene/queryparser/surround/parser/QueryParser.jj + query/
@@ -3007,12 +2602,10 @@ object FulltextQueries {
     // hash/join adjacency — parsed by SurroundParser into the span AST and
     // executed through the standard boolean/span match path.
     "ft_surround" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir)
+      val searcher = searcherOf(spark, sfDir)
       val q = graft.search.SurroundParser
         .parse("and(3w(data, or(table, stream)), 2n(hash, join))")
-      searcher.matchesDS(q).toDF("docId")
-        .join(DocsIndex.docIdMap(index), "docId")
-        .select(col("doc_id")).orderBy("doc_id")
+      matchDF(searcher, q)
     }),
     // Phonetic matching (reference: lucene/analysis/phonetic/src/java/org/
     // apache/lucene/analysis/phonetic/PhoneticFilter.java over
@@ -3030,9 +2623,7 @@ object FulltextQueries {
         .filter(expr(s"${soundexSql("term", "")} = ${soundexSql("'filtre'", "")}"))
         .select("term").collect().map(_.getString(0)).toSeq.sorted
       val q = graft.search.ConstSetQ(terms)
-      searcher.matchesDS(q).toDF("docId")
-        .join(DocsIndex.docIdMap(index), "docId")
-        .select(col("doc_id")).orderBy("doc_id")
+      matchDF(searcher, q)
     }),
     // commit-point time travel (SnapshotDeletionPolicy / IndexDeletionPolicy:
     // IndexStore.openAt scaladoc): generation 0 predates the tombstones, so
@@ -3079,51 +2670,35 @@ object FulltextQueries {
     // SimpleQueryParser syntax (`+`/`|`/`-`, never-throw contract): the
     // translated operators run the same engine; phrase OR (prefix AND NOT)
     "ft_simpleqp" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir)
+      val searcher = searcherOf(spark, sfDir)
       val q = searcher.parser.parseSimple("\"big table\" | tabl* + -vector")
-      searcher.matchesDS(q).toDF("docId")
-        .join(DocsIndex.docIdMap(index), "docId")
-        .select(col("doc_id")).orderBy("doc_id")
+      matchDF(searcher, q)
     }),
     "ft_span_containing" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir)
+      val searcher = searcherOf(spark, sfDir)
       val q = graft.search.SpanContainingQ(
         graft.search.SpanNearQ(Seq("key", "table"), 4, inOrder = true), "value")
-      searcher.matchesDS(q).toDF("docId")
-        .join(DocsIndex.docIdMap(index), "docId")
-        .select(col("doc_id")).orderBy("doc_id")
+      matchDF(searcher, q)
     }),
     // SpanNotQuery: ordered 'key'..'table' chains (gap <= 4) REJECTED when
     // a 'hash' occurrence falls inside the greedy chain's span
     "ft_span_not" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir)
+      val searcher = searcherOf(spark, sfDir)
       val q = graft.search.SpanNotQ(
         graft.search.SpanNearQ(Seq("key", "table"), 4, inOrder = true), "hash")
-      searcher.matchesDS(q).toDF("docId")
-        .join(DocsIndex.docIdMap(index), "docId")
-        .select(col("doc_id")).orderBy("doc_id")
+      matchDF(searcher, q)
     }),
     // SpanFirstQuery: 'spark' somewhere in the first 10 positions (span end
     // <= 10); 0-based engine position p qualifies iff p + 1 <= 10, which is
     // 1-based list index <= 10 on the oracle side
-    "ft_span_first" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir)
-      searcher.matchesDS(graft.search.SpanFirstQ("spark", 10)).toDF("docId")
-        .join(DocsIndex.docIdMap(index), "docId")
-        .select(col("doc_id")).orderBy("doc_id")
-    }),
+    "ft_span_first" -> ((spark, sfDir) =>
+      matchDF(searcherOf(spark, sfDir), graft.search.SpanFirstQ("spark", 10))),
     // SpanPositionRangeQuery (Query.SpanPosRangeQ scaladoc): 'merge'
     // occurrences restricted to positions [5, 20) — start >= 5 AND
     // end (p+1) <= 20; freq = qualifying occurrences, scored through the
     // standard double path
-    "ft_span_posrange" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir)
-      searcher.searchDoubleDS(graft.search.SpanPosRangeQ("merge", 5, 20), 10)
-        .toDF()
-        .join(DocsIndex.docIdMap(index), "docId")
-        .orderBy(desc("score"), asc("doc_id")).limit(10)
-        .select(col("doc_id"), col("score"))
-    }),
+    "ft_span_posrange" -> ((spark, sfDir) =>
+      hitsDoubleDF(searcherOf(spark, sfDir), graft.search.SpanPosRangeQ("merge", 5, 20), 10)),
     // term vector reconstruction (IndexReader.getTermVector; reference:
     // lucene/core/src/java/org/apache/lucene/index/TermVectorsReader.java
     // semantics): one doc's (term, tf, positions) triples decoded from the
@@ -3134,19 +2709,11 @@ object FulltextQueries {
       val (index, _) = DocsIndex.get(spark, sfDir)
       val target = DocsIndex.docIdMap(index).filter(col("doc_id") === 42)
         .select("docId").as[Long].head()
-      index.blocks
-        .filter($"firstDocId" <= target && $"lastDocId" >= target)
-        .flatMap { b =>
-          val eb = b.toEncodedBlock
-          val docs = PostingsCodec.decodeDocs(eb)
-          val i = java.util.Arrays.binarySearch(docs, target)
-          if (i < 0) Iterator.empty
-          else {
-            val freqs = PostingsCodec.decodeFreqs(eb)
-            val poss = PostingsCodec.decodePositions(eb, freqs)
-            Iterator.single((b.term, freqs(i).toLong, poss(i).mkString(",")))
-          }
-        }.toDF("term", "tf", "positions")
+      SegmentMerger.decodeToPostings(
+          index.blocks.filter($"firstDocId" <= target && $"lastDocId" >= target))
+        .filter($"docId" === target)
+        .select($"term", $"tf".cast("long").as("tf"),
+          concat_ws(",", $"positions".cast("array<string>")).as("positions"))
         .orderBy("term")
     }),
     // Explanation (IndexSearcher.explain; reference:
@@ -3164,14 +2731,8 @@ object FulltextQueries {
       val df = index.termStats.filter($"term" === term).head().docFreq
       val n = index.fieldStats.docCount
       val avgdl = index.fieldStats.sumTotalTermFreq / n.toDouble
-      val tf = index.blocks
-        .filter($"term" === term && $"firstDocId" <= target && $"lastDocId" >= target)
-        .collect().iterator.map { b =>
-          val eb = b.toEncodedBlock
-          val docs = PostingsCodec.decodeDocs(eb)
-          val i = java.util.Arrays.binarySearch(docs, target)
-          if (i < 0) 0L else PostingsCodec.decodeFreqs(eb)(i).toLong
-        }.sum
+      val tf = postings(index, term).filter($"docId" === target)
+        .select($"tf").as[Int].collect().map(_.toLong).sum
       val dlq = graft.codec.SmallFloat.byte4ToInt(doc.norm.toByte).toDouble
       val idf = math.log(1d + (n - df + 0.5d) / (df + 0.5d))
       val tfNorm = tf * (1.2d + 1d) / (tf + 1.2d * (1d - 0.75d + 0.75d * dlq / avgdl))
@@ -3258,10 +2819,7 @@ object FulltextQueries {
     // The expression is ONE vectorized projection over (score, field) — the
     // compiled-expression analog Catalyst gives for free.
     "ft_expression" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir)
-      searcher.searchDoubleDS(searcher.parse("vector"), 50).toDF()
-        .join(DocsIndex.docIdMap(index), "docId")
-        .orderBy(desc("score"), asc("doc_id")).limit(50) // global k·P merge
+      hitsDoubleDF(searcherOf(spark, sfDir), "vector", 50) // global k·P merge
         .join(DocsIndex.documents(spark, sfDir).select("doc_id", "n_chars"), "doc_id")
         .withColumn("expr_score",
           round4Col(col("score") / log(lit(1.0) + col("n_chars"))))
@@ -3302,23 +2860,17 @@ object FulltextQueries {
     // MultiPhraseQuery (per-position term SETS, union postings per slot +
     // exact adjacency — Query.multiPhrase scaladoc): ("big"|"slow") "table"
     "ft_multiphrase" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir)
+      val searcher = searcherOf(spark, sfDir)
       val q = graft.search.Query.multiPhrase(Seq(Seq("big", "slow"), Seq("table")))
-      searcher.matchesDS(q).toDF("docId")
-        .join(DocsIndex.docIdMap(index), "docId")
-        .select(col("doc_id")).orderBy("doc_id")
+      matchDF(searcher, q)
     }),
     // CommonTermsQuery (GraftSearcher.commonTermsQuery): 'dup' (df ~5%)
     // stays MUST; 'batch'/'table' (df ~80% > 0.3 cutoff) demote to SHOULD —
     // they boost the score but cannot gate the match
     "ft_common_terms" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir)
+      val searcher = searcherOf(spark, sfDir)
       val q = searcher.commonTermsQuery(Seq("dup", "batch", "table"), 0.3)
-      searcher.searchDoubleDS(q, 10).toDF()
-        .join(DocsIndex.docIdMap(index), "docId")
-        .orderBy(desc("score"), asc("doc_id"))
-        .limit(10)
-        .select(col("doc_id"), col("score"))
+      hitsDoubleDF(searcher, q, 10)
     }),
     // LTR linear-model re-ranking (Solr learning-to-rank: LTRScoringQuery +
     // LinearModel, reference: solr/contrib/ltr/src/java/org/apache/solr/ltr/
@@ -3491,9 +3043,7 @@ object FulltextQueries {
         .collect()
       val q = graft.search.SpanOrNearQ(
         Seq(Seq("query"), exps.toSeq), 3, inOrder = true)
-      searcher.matchesDS(q).toDF("docId")
-        .join(DocsIndex.docIdMap(index), "docId")
-        .select(col("doc_id")).orderBy("doc_id")
+      matchDF(searcher, q)
     }),
     // Boosted SynonymQuery (reference: lucene/core/src/java/org/apache/
     // lucene/search/SynonymQuery.java:75-109 Builder#addTerm(Term, float),
@@ -3504,12 +3054,9 @@ object FulltextQueries {
     // are float-and-double-exact (1.0, 0.5) so the double twin is
     // bit-identical to the oracle.
     "ft_search_synboost" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir)
+      val searcher = searcherOf(spark, sfDir)
       val q = graft.search.SynonymBoostQ(Seq(("spark", 1.0f), ("query", 0.5f)))
-      searcher.searchDoubleDS(q, 10).toDF()
-        .join(DocsIndex.docIdMap(index), "docId")
-        .orderBy(desc("score"), asc("doc_id")).limit(10)
-        .select(col("doc_id"), col("score"))
+      hitsDoubleDF(searcher, q, 10)
     }),
     // Solr TermsComponent terms.regex (reference: solr/core/src/java/org/
     // apache/solr/handler/component/TermsComponent.java:~135-180 regex
@@ -3625,10 +3172,7 @@ object FulltextQueries {
       graft.index.IndexStore.replicate(src, dst)
       val idx = graft.index.IndexStore.open(spark, dst)
       val searcher = new graft.search.GraftSearcher(idx, graft.analysis.Analyzers.simple)
-      searcher.searchDoubleDS(searcher.parse("stream"), 10).toDF()
-        .join(DocsIndex.docIdMap(idx), "docId")
-        .orderBy(desc("score"), asc("doc_id")).limit(10)
-        .select(col("doc_id"), col("score"))
+      hitsDoubleDF(searcher, "stream", 10)
     }),
     // TermVectorComponent (reference: solr/core/src/java/org/apache/solr/
     // handler/component/TermVectorComponent.java:246-320 — per-document term
@@ -3763,29 +3307,24 @@ object FulltextQueries {
     // prefix slot expands against the dictionary (6 terms here), then
     // union-postings exact adjacency like MultiPhraseQuery
     "ft_phrase_wildcard" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir)
+      val searcher = searcherOf(spark, sfDir)
       val q = searcher.phraseWildcard(
         Seq(graft.search.TermQ("fast"), graft.search.PrefixQ("s")))
-      searcher.matchesDS(q).toDF("docId")
-        .join(DocsIndex.docIdMap(index), "docId")
-        .select(col("doc_id")).orderBy("doc_id")
+      matchDF(searcher, q)
     }),
     // Lucene XML query syntax (XmlQueryParser scaladoc — CoreParser.java
     // wiring + builders): a BooleanQuery with must / boosted-should /
     // filter clauses parsed from XML, scored through the standard ReqOpt
     // path: s = bm25(merge) + 0·key (FILTER) + 2-boosted bm25(stream)
     "ft_xmlqp" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir)
+      val searcher = searcherOf(spark, sfDir)
       val q = graft.search.XmlQueryParser.parse(
         """<BooleanQuery>
           |  <Clause occurs="must"><TermQuery>merge</TermQuery></Clause>
           |  <Clause occurs="should"><TermQuery boost="2.0">stream</TermQuery></Clause>
           |  <Clause occurs="filter"><TermQuery>key</TermQuery></Clause>
           |</BooleanQuery>""".stripMargin)
-      searcher.searchDoubleDS(q, 10).toDF()
-        .join(DocsIndex.docIdMap(index), "docId")
-        .orderBy(desc("score"), asc("doc_id")).limit(10)
-        .select(col("doc_id"), col("score"))
+      hitsDoubleDF(searcher, q, 10)
     }),
     // BlendedInfixSuggester (reference: lucene/suggest/src/java/org/apache/
     // lucene/search/suggest/analyzing/BlendedInfixSuggester.java:60-140,
@@ -3874,7 +3413,7 @@ object FulltextQueries {
     // accumulated as floor(p·1e8) BIGINTs so the distributed sum is
     // order-independent; every other value is a single IEEE division.
     "ft_eval_metrics" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir)
+      val searcher = searcherOf(spark, sfDir)
       val hits = searcher.searchDouble(searcher.parse("vector"), 20)
       val ranked = spark.createDataFrame(
         hits.toSeq.sortBy(h => (-h.score, h.docId)).zipWithIndex
@@ -3966,7 +3505,7 @@ object FulltextQueries {
         "b" -> "table AND spark",
         "default" -> "merge")
       val selected = cases.getOrElse("b", cases("default"))
-      matchDF(spark, sfDir, selected)
+      matchDF(searcherOf(spark, sfDir), selected)
     }),
     // {!maxscore} (solr/core/src/java/org/apache/solr/search/
     // MaxScoreQParserPlugin.java — boolean syntax where SHOULD clauses
@@ -3995,9 +3534,7 @@ object FulltextQueries {
         .filter($"term".isin(wanted: _*) && $"docFreq" <= 385)
         .map(_.term).collect().toSeq
       val q = graft.search.BoolQ(should = kept.map(graft.search.TermQ(_)))
-      searcher.matchesDS(q).toDF("docId")
-        .join(DocsIndex.docIdMap(index), "docId")
-        .select(col("doc_id")).orderBy("doc_id")
+      matchDF(searcher, q)
     }),
     // FeatureField sigmoid scoring (lucene/core/src/java/org/apache/lucene/
     // document/FeatureField.java:80-84,482 — sigm(S) = w·S^a/(S^a + k^a);
@@ -4047,14 +3584,12 @@ object FulltextQueries {
     // float-truncated): 4 SHOULD terms -> msm 3, evaluated by the engine's
     // own mm parser feeding the real minShouldMatch scatter.
     "ft_mm_spec" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir)
+      val searcher = searcherOf(spark, sfDir)
       val terms = Seq("vector", "table", "spark", "window")
       val msm = graft.search.Query.calculateMinShouldMatch(terms.size, "2<75%")
       val q = graft.search.BoolQ(
         should = terms.map(graft.search.TermQ(_)), minShouldMatch = msm)
-      searcher.matchesDS(q).toDF("docId")
-        .join(DocsIndex.docIdMap(index), "docId")
-        .select(col("doc_id")).orderBy("doc_id")
+      matchDF(searcher, q)
     }),
     // Mixed-operator parsing under the engine's precedence grammar
     // (Query.scala:507 `or := and (OR and)*` — AND binds tighter than OR,
@@ -4064,19 +3599,17 @@ object FulltextQueries {
     // +a +b c): 'spark AND vector OR customer' matches the conjunction
     // UNION customer.
     "ft_parser_precedence" -> ((spark, sfDir) =>
-      matchDF(spark, sfDir, "spark AND vector OR customer")),
+      matchDF(searcherOf(spark, sfDir), "spark AND vector OR customer")),
     // Pure-negative query handling (solr/core/src/java/org/apache/solr/
     // search/QueryUtils.java fixNegativeQuery — Solr wraps a top-level
     // negative in MatchAll so '-vector' means "everything except"):
     // MatchAll anchored NOT through the real scatter (empty ranges still
     // execute via the cogrouped MatchAll path).
     "ft_pure_negative" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir)
+      val searcher = searcherOf(spark, sfDir)
       val q = graft.search.BoolQ(must = Seq(graft.search.MatchAllQ),
         mustNot = Seq(graft.search.TermQ("vector")))
-      searcher.matchesDS(q).toDF("docId")
-        .join(DocsIndex.docIdMap(index), "docId")
-        .select(col("doc_id")).orderBy("doc_id")
+      matchDF(searcher, q)
     }),
     // HighFreqTerms -t (lucene/misc/src/java/org/apache/lucene/misc/
     // HighFreqTerms.java — top terms ranked by totalTermFreq instead of
@@ -4115,7 +3648,7 @@ object FulltextQueries {
     // span leg is the same OR-slot execution as ft_span_prefix.
     "ft_span_fuzzy" -> ((spark, sfDir) => {
       import spark.implicits._
-      val (index, searcher) = DocsIndex.get(spark, sfDir)
+      val searcher = searcherOf(spark, sfDir)
       // "fuzzy prefix 1" == FuzzyQ("tble", 1, prefixLength=1,
       // transpositions=true): startsWith("t") is the prefix anchor and the
       // damerau<=1 check is the exact verify — so the expansion routes
@@ -4127,9 +3660,7 @@ object FulltextQueries {
         .collect()
       val q = graft.search.SpanOrNearQ(
         Seq(Seq("hash"), variants.toSeq), 3, inOrder = true)
-      searcher.matchesDS(q).toDF("docId")
-        .join(DocsIndex.docIdMap(index), "docId")
-        .select(col("doc_id")).orderBy("doc_id")
+      matchDF(searcher, q)
     }),
     // MappingCharFilter (lucene/analysis/common/src/java/org/apache/lucene/
     // analysis/charfilter/MappingCharFilter.java + NormalizeCharMap —
@@ -4137,13 +3668,8 @@ object FulltextQueries {
     // (big=>large) scored for 'large'; tf/df/norms all reflect the
     // rewritten stream, which the oracle recomputes from the same
     // regexp_replace.
-    "ft_mapping_charfilter" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.Mapped)
-      searcher.searchDoubleDS(graft.search.TermQ("large"), 10).toDF()
-        .join(DocsIndex.docIdMap(index), "docId")
-        .orderBy(desc("score"), asc("doc_id")).limit(10)
-        .select(col("doc_id"), col("score"))
-    }),
+    "ft_mapping_charfilter" -> ((spark, sfDir) =>
+      hitsDoubleDF(searcherOf(spark, sfDir, DocsIndex.Mapped), graft.search.TermQ("large"), 10)),
     // Compound sort (lucene/core/src/java/org/apache/lucene/search/Sort.java
     // — multi-SortField: primary field asc, secondary score desc, docId
     // tiebreak; TopFieldCollector compares fields in order): 'vector' hits
@@ -4551,28 +4077,21 @@ object FulltextQueries {
     // short-query tuning k1=0.875, b=0.25 (both dyadic, so the Float
     // fields widen to EXACT doubles) through the same double scorer; the
     // oracle inlines the tuned constants into the textbook formula.
-    "ft_search_bm25_tuned" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir)
-      val s = searcher.withSimilarity(graft.search.Bm25Sim(0.875f, 0.25f))
-      s.searchDoubleDS(s.parse("vector OR merge"), 10).toDF()
-        .join(DocsIndex.docIdMap(index), "docId")
-        .orderBy(desc("score"), asc("doc_id")).limit(10)
-        .select(col("doc_id"), col("score"))
-    }),
+    "ft_search_bm25_tuned" -> ((spark, sfDir) =>
+      hitsDoubleDF(
+        searcherOf(spark, sfDir).withSimilarity(graft.search.Bm25Sim(0.875f, 0.25f)),
+        "vector OR merge", 10)),
     // cursorMark deep paging (solr/core/src/java/org/apache/solr/search/
     // CursorMark.java — each response carries the next totem; a page-3
     // fetch is two cursor hops, never an offset scan): two searchAfter
     // hops of 5 must equal OFFSET 10 LIMIT 5 of the global order.
     "ft_cursor_walk" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir)
+      val searcher = searcherOf(spark, sfDir)
       val q = searcher.parse("table")
       val p1 = searcher.searchDouble(q, 5)
       val p2 = if (p1.isEmpty) p1 else searcher.searchDouble(q, 5, p1.last)
       val after = if (p2.isEmpty) null else p2.last
-      searcher.searchDoubleDS(q, 5, after).toDF()
-        .join(DocsIndex.docIdMap(index), "docId")
-        .orderBy(desc("score"), asc("doc_id")).limit(5)
-        .select(col("doc_id"), col("score"))
+      hitsDoubleDF(searcher, q, 5, after)
     }),
     // EnumFieldType ordinal sort (solr/core/src/java/org/apache/solr/
     // schema/EnumFieldType.java — a configured value list sorts by ordinal,
@@ -4661,13 +4180,8 @@ object FulltextQueries {
     // unlike ft_delete_search (tombstones live, stats still include deleted
     // docs), here the merge PURGES the %7 tombstones, so docCount/avgdl/df
     // all shift to the survivor set and the BM25 scores move with them.
-    "ft_merged_search" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.MergedDeletes)
-      searcher.searchDoubleDS(searcher.parse("vector"), 10).toDF()
-        .join(DocsIndex.docIdMap(index), "docId")
-        .orderBy(desc("score"), asc("doc_id")).limit(10)
-        .select(col("doc_id"), col("score"))
-    }),
+    "ft_merged_search" -> ((spark, sfDir) =>
+      hitsDoubleDF(searcherOf(spark, sfDir, DocsIndex.MergedDeletes), "vector", 10)),
     // PerFieldSimilarityWrapper (lucene/core/src/java/org/apache/lucene/
     // search/similarities/PerFieldSimilarityWrapper.java:20-45 — each field
     // scores under its own Similarity inside one query): BM25 leg ('vector')
@@ -4690,13 +4204,8 @@ object FulltextQueries {
     // periodic expire purge runs through it): the delete set comes from a
     // real query ('slow AND hash') against the committed index, tombstoned
     // through the same .liv-analog path; a subsequent search honors them.
-    "ft_delete_by_query" -> ((spark, sfDir) => {
-      val (index, searcher) = DocsIndex.get(spark, sfDir, DocsIndex.QueryDeletes)
-      searcher.matchesDS(searcher.parse("table OR vector")).toDF("docId")
-        .join(DocsIndex.docIdMap(index), "docId")
-        .select(col("doc_id"))
-        .orderBy("doc_id")
-    }),
+    "ft_delete_by_query" -> ((spark, sfDir) =>
+      matchDF(searcherOf(spark, sfDir, DocsIndex.QueryDeletes), "table OR vector")),
     // PathHierarchyTokenizer (lucene/analysis/common/src/java/org/apache/
     // lucene/analysis/path/PathHierarchyTokenizer.java:30-49 — "/a/b/c" emits
     // /a, /a/b, /a/b/c): each doc's lang/source/decile path expands to its

@@ -1,13 +1,25 @@
 #!/usr/bin/env python3
-"""Local stand-in for the driver's correctness gate: run Verify (already done
-via sbt, producing outDir/<name>.parquet + oracle_sql.json), then execute each
-oracle SQL in DuckDB over the sf tables and compare rows/schema/values.
+"""Local stand-in for the driver's correctness gate over a graft.Verify run
+(outDir/<name>/*.parquet + outDir/oracle_sql.json).
 
-Usage: python3 tools/localverify.py <sfDir> <outDir> [queryFilter...]
+Oracle mode: execute each oracle SQL in DuckDB over the sf tables and
+compare rows/schema/values with the engine output. An oracle key with no
+output dir (a query that threw inside Verify) is reported MISSING and
+counts as a failure.
+
+  python3 tools/localverify.py <sfDir> <outDir> [queryFilter...]
+
+Against mode: compare every output dir of two Verify runs as canonicalized
+row multisets (covers the queries that ship no oracle too), plus whether
+the two oracle_sql.json files are byte-identical.
+
+  python3 tools/localverify.py --against <baseOutDir> <outDir> [queryFilter...]
+
+Exit status is 1 when anything fails.
 """
 import sys, json, glob, os
-import duckdb
 import pandas as pd
+
 
 def canon(df: pd.DataFrame) -> pd.DataFrame:
     df = df.reindex(sorted(df.columns), axis=1)
@@ -26,9 +38,26 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
         return s
     return df.apply(lambda c: c.map(cell))
 
-def main():
-    sf_dir, out_dir = sys.argv[1], sys.argv[2]
-    filters = sys.argv[3:]
+
+def output_names(out_dir):
+    return sorted(d for d in os.listdir(out_dir)
+                  if os.path.isdir(os.path.join(out_dir, d)))
+
+
+def read_output(out_dir, name):
+    # sorted: part-00000, part-00001, ... must concatenate in the
+    # engine's global sort order for row-order-sensitive compares
+    files = sorted(glob.glob(os.path.join(out_dir, name, "*.parquet")))
+    return pd.concat([pd.read_parquet(f) for f in files]) if files \
+        else pd.DataFrame()
+
+
+def selected(name, filters):
+    return not filters or any(f in name for f in filters)
+
+
+def oracle_mode(sf_dir, out_dir, filters):
+    import duckdb
     with open(os.path.join(out_dir, "oracle_sql.json")) as f:
         oracles = json.load(f)
     con = duckdb.connect()
@@ -37,17 +66,16 @@ def main():
         p = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
-    names = sorted(d for d in os.listdir(out_dir)
-                   if os.path.isdir(os.path.join(out_dir, d)))
-    n_pass = n_fail = n_noorc = 0
+    names = output_names(out_dir)
+    n_pass = n_fail = n_noorc = n_missing = 0
+    for name in sorted(set(oracles) - set(names)):
+        if selected(name, filters):
+            print(f"  {name}: MISSING (oracle key with no output)")
+            n_missing += 1
     for name in names:
-        if filters and not any(f in name for f in filters):
+        if not selected(name, filters):
             continue
-        # sorted: part-00000, part-00001, ... must concatenate in the
-        # engine's global sort order for row-order-sensitive compares
-        files = sorted(glob.glob(os.path.join(out_dir, name, "*.parquet")))
-        spark_df = pd.concat([pd.read_parquet(f) for f in files]) if files \
-            else pd.DataFrame()
+        spark_df = read_output(out_dir, name)
         if name not in oracles:
             print(f"  {name}: NO_ORACLE (spark_rows={len(spark_df)})")
             n_noorc += 1
@@ -77,8 +105,53 @@ def main():
                 print("   first diffs (spark vs oracle):")
                 print(a.reset_index(drop=True)[bad].head(3))
                 print(b.reset_index(drop=True)[bad].head(3))
-    print(f"pass={n_pass} fail={n_fail} no_oracle={n_noorc}")
-    sys.exit(1 if n_fail else 0)
+    print(f"pass={n_pass} fail={n_fail} missing={n_missing} no_oracle={n_noorc}")
+    return n_fail + n_missing == 0
+
+
+def row_multiset(df):
+    c = canon(df)
+    return list(c.columns), sorted(map(tuple, c.itertuples(index=False)))
+
+
+def against_mode(base_dir, out_dir, filters):
+    base = {n for n in output_names(base_dir) if selected(n, filters)}
+    new = {n for n in output_names(out_dir) if selected(n, filters)}
+    n_same = n_diff = 0
+    for name in sorted(base - new):
+        print(f"  {name}: MISSING (in base only)")
+    for name in sorted(new - base):
+        print(f"  {name}: EXTRA (in new only)")
+    for name in sorted(base & new):
+        ca, ra = row_multiset(read_output(base_dir, name))
+        cb, rb = row_multiset(read_output(out_dir, name))
+        if ca == cb and ra == rb:
+            n_same += 1
+        else:
+            n_diff += 1
+            print(f"  {name}: DIFF cols {ca} vs {cb}, rows {len(ra)} vs {len(rb)}")
+            only_a = [r for r in ra if r not in rb][:3]
+            only_b = [r for r in rb if r not in ra][:3]
+            print(f"   base only: {only_a}\n   new only:  {only_b}")
+    with open(os.path.join(base_dir, "oracle_sql.json"), "rb") as f:
+        oa = f.read()
+    with open(os.path.join(out_dir, "oracle_sql.json"), "rb") as f:
+        ob = f.read()
+    oracle_same = oa == ob
+    n_missing, n_extra = len(base - new), len(new - base)
+    print(f"identical={n_same} differ={n_diff} missing={n_missing} "
+          f"extra={n_extra} oracle_sql_identical={oracle_same}")
+    return n_diff + n_missing + n_extra == 0 and oracle_same
+
+
+def main():
+    args = sys.argv[1:]
+    if args[:1] == ["--against"]:
+        ok = against_mode(args[1], args[2], args[3:])
+    else:
+        ok = oracle_mode(args[0], args[1], args[2:])
+    sys.exit(0 if ok else 1)
+
 
 if __name__ == "__main__":
     main()
